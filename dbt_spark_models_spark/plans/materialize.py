@@ -297,7 +297,7 @@ def _materialize_deltalite(
             return write_full(first_run_sql or sql, "created")
         strategy = config.get("incremental_strategy", "insert_overwrite")
         osc = config.get("on_schema_change", "ignore")
-        df = _align_columns_deltalite(spark, spark.sql(sql), path, osc)
+        df = _align_columns_deltalite(spark.sql(sql), path, osc)
         if strategy == "append":
             deltalite.write(spark, df, path, "append", txn=cdf_txn)
             return finish("appended")
@@ -323,18 +323,19 @@ def _materialize_deltalite(
 
 
 def _align_columns_deltalite(
-    spark: SparkSession, df: DataFrame, path: str, on_schema_change: str
+    df: DataFrame, path: str, on_schema_change: str
 ) -> DataFrame:
     """on_schema_change against a DeltaLite table's committed schema:
     missing committed columns NULL-fill (cast to the committed type);
     new columns are kept only for append_new_columns / sync_all_columns
     (DeltaLite's append/dynamic-overwrite evolves the schema additively,
-    so keeping them IS the ALTER TABLE ADD COLUMNS of the catalog path)."""
+    so keeping them IS the ALTER TABLE ADD COLUMNS of the catalog path).
+    The schema comes from the log alone; no snapshot scan is built."""
     from pyspark.sql import functions as F
 
     from dbt_spark_models_spark.sources import deltalite
 
-    committed = deltalite.read(spark, path).schema
+    committed = deltalite.table_schema(path)
     tgt_names = {f.name for f in committed.fields}
     new_cols = [c for c in df.columns if c not in tgt_names]
     keep_new = (

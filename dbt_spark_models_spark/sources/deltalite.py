@@ -48,14 +48,17 @@ files, Spark's own row-group pushdown still applies.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
 import re
 import shutil
+import threading
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -304,6 +307,14 @@ def table_protocol(table_path: str) -> dict:
         "minReaderVersion": 1,
         "minWriterVersion": 1,
     }
+
+
+def table_schema(table_path: str) -> StructType:
+    """Public: the committed logical schema of the latest snapshot, from
+    the replayed ``metaData.schemaString`` alone — no scan is built."""
+    state = _replay_state(table_path)
+    _assert_readable(state.get("protocol"), table_path)
+    return StructType.fromJson(json.loads(state["meta"]["schemaString"]))
 
 
 def _assert_readable(proto: dict | None, table_path: str = "") -> None:
@@ -619,11 +630,41 @@ def coerce_partition_value(value: str | None, type_name: str):
     return value
 
 
+@contextlib.contextmanager
+def _staging_dir(table_path: str):
+    """A fresh ``_staging_<uuid>`` path under the table root, removed on
+    exit. The writer holds an exclusive ``flock`` on the sibling
+    ``_staging_<uuid>.lock`` for the whole block, so ``vacuum`` never
+    reclaims a live write however long a straggler task stays silent;
+    the kernel drops the lock of a killed process."""
+    staging = os.path.join(table_path, f"_staging_{uuid.uuid4().hex}")
+    with open(staging + ".lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        try:
+            yield staging
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+            os.remove(staging + ".lock")
+
+
+def _staging_live(staging: str) -> bool:
+    """Whether a writer still holds ``staging``'s lock (``_staging_dir``)."""
+    try:
+        with open(staging + ".lock") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except BlockingIOError:
+        return True
+    except FileNotFoundError:
+        pass  # the writer finished, or a leftover that predates locks
+    return False
+
+
 def _write_data_files(
     df: DataFrame,
     table_path: str,
     partition_by: list[str] | None = None,
     drop_partition_cols: tuple[str, ...] = (),
+    change_data: bool = False,
 ) -> list[dict]:
     """Write df's rows as parquet files with globally-unique names under
     the table root (spec: data files are inert until committed). Returns
@@ -638,56 +679,68 @@ def _write_data_files(
     ``drop_partition_cols`` names partition_by columns used ONLY to
     split the write into files (OPTIMIZE's Z-bucket id): their hive
     segments are stripped from the destination path and their keys from
-    partitionValues — the committed layout never sees them."""
-    staging = os.path.join(table_path, f"_staging_{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
+    partitionValues — the committed layout never sees them.
+
+    ``change_data=True`` writes change rows (data columns +
+    ``_change_type``) flat under ``_change_data/`` and returns ``cdc``
+    payloads instead: CDC files are NOT part of any snapshot
+    (``_apply_action`` ignores the action), so they carry
+    ``dataChange: false`` per the spec.
+
+    The staging directory is removed whether or not the write succeeds;
+    one orphaned by a killed process is ``vacuum``'s to reclaim."""
+    root, prefix = (
+        (os.path.join(table_path, _CDC_DIR), "cdc")
+        if change_data
+        else (table_path, "part")
+    )
     real_partition_by = [
         c for c in (partition_by or []) if c not in drop_partition_cols
     ]
     adds = []
     now_ms = int(time.time() * 1000)
-    for dirpath, _dirs, files in os.walk(staging):
-        rel_dir = os.path.relpath(dirpath, staging)
-        segments = [] if rel_dir == "." else rel_dir.split(os.sep)
-        if drop_partition_cols:
-            segments = [
-                s
-                for s in segments
-                if "=" not in s
-                or _decode_partition_dir(s)[0] not in drop_partition_cols
-            ]
-        pvals: dict[str, str | None] = {}
-        for seg in segments:
-            if "=" in seg:
-                k, v = _decode_partition_dir(seg)
-                pvals[k] = v
-        for f in files:
-            if not f.endswith(".parquet"):
-                continue
-            unique = f"part-{uuid.uuid4().hex}.parquet"
-            src = os.path.join(dirpath, f)
-            dest = os.path.join(table_path, *segments, unique)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.rename(src, dest)
-            stats = _file_stats(dest)
-            if stats is not None and stats["numRecords"] == 0:
-                os.remove(dest)  # empty part files are never committed
-                continue
-            add = {
-                "path": "/".join([*segments, unique]),
-                "size": os.path.getsize(dest),
-                "modificationTime": now_ms,
-                "dataChange": True,
-            }
-            if real_partition_by:
-                add["partitionValues"] = pvals
-            if stats is not None:
-                add["stats"] = json.dumps(stats, separators=(",", ":"))
-            adds.append(add)
-    shutil.rmtree(staging, ignore_errors=True)
+    with _staging_dir(table_path) as staging:
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
+        for dirpath, _dirs, files in os.walk(staging):
+            rel_dir = os.path.relpath(dirpath, staging)
+            segments = [] if rel_dir == "." else rel_dir.split(os.sep)
+            if drop_partition_cols:
+                segments = [
+                    s
+                    for s in segments
+                    if "=" not in s
+                    or _decode_partition_dir(s)[0] not in drop_partition_cols
+                ]
+            pvals: dict[str, str | None] = {}
+            for seg in segments:
+                if "=" in seg:
+                    k, v = _decode_partition_dir(seg)
+                    pvals[k] = v
+            for f in files:
+                if not f.endswith(".parquet"):
+                    continue
+                unique = f"{prefix}-{uuid.uuid4().hex}.parquet"
+                dest = os.path.join(root, *segments, unique)
+                os.makedirs(os.path.dirname(dest), exist_ok=True)
+                os.rename(os.path.join(dirpath, f), dest)
+                stats = _file_stats(dest)
+                if stats is not None and stats["numRecords"] == 0:
+                    os.remove(dest)  # empty part files are never committed
+                    continue
+                rel = os.path.relpath(dest, table_path).replace(os.sep, "/")
+                add = {"path": rel, "size": os.path.getsize(dest)}
+                if change_data:
+                    adds.append({**add, "partitionValues": {}, "dataChange": False})
+                    continue
+                add.update(modificationTime=now_ms, dataChange=True)
+                if real_partition_by:
+                    add["partitionValues"] = pvals
+                if stats is not None:
+                    add["stats"] = json.dumps(stats, separators=(",", ":"))
+                adds.append(add)
     return adds
 
 
@@ -743,10 +796,12 @@ def _column_mapping(meta: dict) -> dict[str, str]:
 
 
 def _to_physical(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """Rename logical columns to their physical file names for writing."""
-    return df.select(
-        *[F.col(logical).alias(phys) for logical, phys in mapping.items()]
-    )
+    """Rename logical columns to their physical file names for writing;
+    columns outside the mapping (``_change_type``, a write-partition
+    helper) pass through, and an empty mapping is the identity."""
+    if not mapping:
+        return df
+    return df.select(*[F.col(c).alias(mapping.get(c, c)) for c in df.columns])
 
 
 def _physical_schema(schema: StructType, mapping: dict[str, str]) -> StructType:
@@ -1051,11 +1106,7 @@ def write(
             fj["nullable"] = True
             fj["metadata"] = {**(fj.get("metadata") or {}), _PHYS_KEY: phys}
             sch["fields"].append(fj)
-        adds = _write_data_files(
-            df.select(*[F.col(c).alias(mapping[c]) for c in df.columns]),
-            table_path,
-            partition_by,
-        )
+        adds = _write_data_files(_to_physical(df, mapping), table_path, partition_by)
         meta_action: dict = {
             "metaData": dict(
                 meta, schemaString=json.dumps(sch, separators=(",", ":"))
@@ -1311,6 +1362,34 @@ def read(
 _DV_FILE_COL = "__dl_file"
 _DV_ROW_COL = "__dl_row"
 
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.RLock()
+
+
+@contextlib.contextmanager
+def _log_listed(spark: SparkSession):
+    """Scope for building a scan over files the log already enumerates.
+    Above ``_LISTING_THRESHOLD`` paths (default 32) Spark stats an
+    explicit path list with a distributed job, one task per file — pure
+    overhead here. The threshold is raised only while the (eager) file
+    index is built, then restored unless another thread set it meanwhile.
+    It is still the SHARED session conf: the lock orders DeltaLite reads
+    only, so a directory scan another thread plans inside this window
+    lists serially (the window is one file-index build)."""
+    raised = str(2**31 - 1)
+    with _LISTING_LOCK:
+        prior = spark.conf.get(_LISTING_THRESHOLD, None)
+        spark.conf.set(_LISTING_THRESHOLD, raised)
+        try:
+            yield
+        finally:
+            if spark.conf.get(_LISTING_THRESHOLD, None) != raised:
+                pass  # another thread's own value: keep it
+            elif prior is None:
+                spark.conf.unset(_LISTING_THRESHOLD)
+            else:
+                spark.conf.set(_LISTING_THRESHOLD, prior)
+
 
 def _scan_active(
     spark: SparkSession,
@@ -1351,7 +1430,10 @@ def _scan_active(
         # discovery reconstruct them (typed per the schema) even though we
         # hand it an explicit active-file list
         reader = reader.option("basePath", table_path)
-    df = reader.parquet(*paths)
+    # the log already enumerates the active files, so Spark's listing job
+    # would only re-stat them
+    with _log_listed(spark):
+        df = reader.parquet(*paths)
     dv_paths = sorted(
         {
             a["deletionVector"]["path"]
@@ -1395,9 +1477,11 @@ def _scan_active(
         if not (dv_paths or with_row_address):
             df = df.drop(_DV_FILE_COL, _DV_ROW_COL)
     if dv_paths:
-        tomb = spark.read.parquet(
-            *[os.path.join(table_path, d) for d in dv_paths]
-        ).select(
+        with _log_listed(spark):
+            tomb = spark.read.parquet(
+                *[os.path.join(table_path, d) for d in dv_paths]
+            )
+        tomb = tomb.select(
             F.col("file_name").alias(_DV_FILE_COL),
             F.col("row_index").alias(_DV_ROW_COL),
         )
@@ -1447,17 +1531,25 @@ def merge(
     ``macros/spark_adapter_patch/create_table.sql:21-38``). The rewrite
     and the swap land in ONE atomic commit — remove(rewritten files) +
     add(replacements), so readers see pre- or post-merge state, never
-    between. Duplicate-key sources are rejected like delta's MERGE.
+    between. A NULL key never matches (SQL equality).
 
-    Like ``delete``, the rewrite set is PRUNED by stats: a 1-row probe
-    computes the source's min/max per key column, and only active files
-    whose key-range stats overlap it are read and rewritten — files that
-    provably contain no matched key keep their bytes untouched (at 100 TB
-    a merge aligned with the table's clustering touches the handful of
-    files holding the upserted keys, not the table). The snapshot version
-    is captured ONCE and the commit lands at snapshot+1, so a concurrent
-    commit makes the O_EXCL create raise ConcurrentWriteError (retry on a
-    fresh snapshot) instead of being silently clobbered.
+    ONE fused probe aggregates the source (conformed to the committed
+    schema) by key: its largest rows-per-key count rejects duplicate-key
+    sources like delta's MERGE — keys that collide only once cast
+    included — and its per-key min/max prunes the rewrite set by stats;
+    a matched-file probe then keeps exactly the files holding a matched
+    key (at 100 TB a merge aligned with the table's clustering touches
+    the handful of files holding the upserted keys, not the table).
+
+    ONE left join against the source keys tags the candidate target rows
+    (broadcastable, so the target is not shuffled and a rewritten file's
+    survivors stay together): rewritten files get the unmatched rows plus
+    the whole source. The change feed is the matched rows
+    (update_preimage) in a tagged union with the source, windowed by key
+    to split update_postimage from insert — a shuffle of source-sized
+    data only. Nothing is cached. The snapshot version is captured ONCE
+    and the commit lands at snapshot+1, so a concurrent commit makes the
+    O_EXCL create raise ConcurrentWriteError instead of being clobbered.
 
     ``deletion_vectors=True`` makes the merge MERGE-ON-READ: matched
     pre-image rows are tombstoned in place (no candidate file is
@@ -1469,9 +1561,6 @@ def merge(
     the tombstones on its own schedule."""
     if deletion_vectors and not change_feed:
         raise ValueError("deletion_vectors=True requires change_feed=True")
-    dup = source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-    if dup:
-        raise ValueError("merge source has duplicate unique_key rows")
     versions = _list_versions(table_path)
     snap_version = versions[-1]
     state = _replay_state(table_path, snap_version)
@@ -1502,26 +1591,34 @@ def merge(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )
     _enforce_constraints(source, meta, "merge source")
-    # 1-row source key-range probe (driver-side O(1)); a file can hold a
-    # matched key only if, for EVERY key column, its [min,max] intersects
-    # the source's [min,max]
-    rng = source.agg(
-        *[F.min(k).alias(f"mn_{k}") for k in keys],
-        *[F.max(k).alias(f"mx_{k}") for k in keys],
-    ).collect()[0]
-    overlap: list[tuple] | None = []
-    for k in keys:
-        mn, mx = rng[f"mn_{k}"], rng[f"mx_{k}"]
-        if mn is None:
-            overlap = None  # empty source: no file holds a matched key
-            break
-        overlap += [(k, "<=", mx), (k, ">=", mn)]
-    phys_overlap = _translate_filters(overlap, mapping) if overlap else None
-    rewrite = [
-        p
-        for p in sorted(active)
-        if overlap is not None and not _maybe_skip(active[p], phys_overlap)
-    ]
+    # one driver-side row: duplicate check and key ranges in one pass
+    probe = (
+        source.groupBy(*keys)
+        .count()
+        .agg(
+            F.max("count").alias("__dl_dup"),
+            *[F.min(k).alias(f"mn_{k}") for k in keys],
+            *[F.max(k).alias(f"mx_{k}") for k in keys],
+        )
+        .collect()[0]
+    )
+    if (probe["__dl_dup"] or 0) > 1:
+        raise ValueError("merge source has duplicate unique_key rows")
+    empty = probe["__dl_dup"] is None
+    rewrite: list[str] = []
+    # a key column that is NULL on every source row matches nothing
+    if not empty and all(probe[f"mn_{k}"] is not None for k in keys):
+        # a file can hold a matched key only if, for EVERY key column,
+        # its [min,max] intersects the source's [min,max]
+        overlap = _translate_filters(
+            [
+                f
+                for k in keys
+                for f in ((k, "<=", probe[f"mx_{k}"]), (k, ">=", probe[f"mn_{k}"]))
+            ],
+            mapping,
+        )
+        rewrite = [p for p in sorted(active) if not _maybe_skip(active[p], overlap)]
     if rewrite and (append_only or not deletion_vectors):
         # matched-FILE probe (key columns only — column pruning makes it
         # far cheaper than the rewrite): the probe's matched-key set is
@@ -1532,7 +1629,7 @@ def merge(
         # gets from its `touched` counter). For append-only tables the
         # probe also DECIDES legality: matches mean the commit would
         # remove/tombstone rows.
-        probe = _scan_active(
+        key_scan = _scan_active(
             spark,
             table_path,
             meta,
@@ -1541,7 +1638,7 @@ def merge(
         ).select(_DV_FILE_COL, *keys)
         matched_names = {
             r[0]
-            for r in probe.join(source.select(*keys), on=keys, how="left_semi")
+            for r in key_scan.join(source.select(*keys), on=keys, how="left_semi")
             .select(_DV_FILE_COL)
             .distinct()
             .collect()  # ≤ |candidate files| rows — file names, not data
@@ -1558,88 +1655,67 @@ def merge(
     now_ms = int(time.time() * 1000)
     adds: list[dict] = []
     cdc_adds: list[dict] = []
-    dv_removes: list[dict] = []
-    dv_re_adds: list[dict] = []
-    dv_mode = deletion_vectors and overlap is not None and bool(rewrite)
-    if overlap is not None:  # empty source merges nothing
-        if dv_mode:
+    dv_mode = deletion_vectors and bool(rewrite)
+    removes = [
+        {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
+        for p in ([] if dv_mode else rewrite)
+    ]
+    re_adds: list[dict] = []
+    if not empty:  # an empty source merges nothing
+        result = source
+        changes = source.withColumn(CHANGE_TYPE_COL, F.lit("insert"))
+        if rewrite:
             candidates = {p: active[p] for p in rewrite}
-            target_addr = _scan_active(
-                spark, table_path, meta, candidates, with_row_address=True
-            )
-            # matched pre-images are tombstoned in place; the whole
-            # source (updates + inserts) lands as one new append
-            matched = target_addr.join(
-                source.select(*keys), on=keys, how="left_semi"
-            )
-            dv_name, dv_counts = _write_tombstones(
-                spark, table_path, candidates, matched
-            )
-            dv_removes, dv_re_adds, touched = _dv_repoint_actions(
-                candidates, dv_name, dv_counts, now_ms
-            )
-            if not touched:  # stats grazed, no key matched: insert-only
-                _remove_sidecar(table_path, dv_name)
-            target = target_addr.drop(_DV_FILE_COL, _DV_ROW_COL)
-            result = source.select(*out_cols)
-        elif rewrite:
+            # candidate rows LEFT JOIN the unique (duplicate-checked) source
+            # keys — broadcastable, so a rewritten file's survivors stay
+            # together, unshuffled; a NULL key never matches
             target = _scan_active(
-                spark, table_path, meta, {p: active[p] for p in rewrite}
+                spark, table_path, meta, candidates, with_row_address=dv_mode
+            ).join(
+                source.select(*keys, F.lit(True).alias("__dl_has_src")), keys, "left"
             )
-            result = target.join(source, on=keys, how="left_anti").unionByName(
-                source.select(*out_cols)
+            matched = target.filter(F.col("__dl_has_src").isNotNull())
+            # change rows: the matched pre-images and the source, tagged
+            # and windowed by key — both sides are source-sized
+            pre = F.col("__dl_side") == 0
+            has_tgt = F.max(pre).over(Window.partitionBy(*keys))
+            changes = (
+                matched.select(*out_cols, F.lit(0).alias("__dl_side"))
+                .unionByName(source.withColumn("__dl_side", F.lit(1)))
+                .select(
+                    *out_cols,
+                    F.when(pre, "update_preimage")
+                    .when(has_tgt, "update_postimage")
+                    .otherwise("insert")
+                    .alias(CHANGE_TYPE_COL),
+                )
             )
-        else:
-            result = source.select(*out_cols)
-        adds = _write_data_files(
-            _to_physical(result, mapping) if mapping else result,
-            table_path,
-            pcols,
-        )
+            if dv_mode:
+                # matched pre-images are tombstoned in place; the whole
+                # source (updates + inserts) lands as one new append
+                dv_name, dv_counts = _write_tombstones(
+                    spark, table_path, candidates, matched
+                )
+                removes, re_adds, touched = _dv_repoint_actions(
+                    candidates, dv_name, dv_counts, now_ms
+                )
+                if not touched:  # stats grazed, no key matched: insert-only
+                    _remove_sidecar(table_path, dv_name)
+            else:
+                unmatched = target.filter(F.col("__dl_has_src").isNull())
+                result = unmatched.select(*out_cols).unionByName(source)
+        adds = _write_data_files(_to_physical(result, mapping), table_path, pcols)
         if change_feed:
             # spec CDC: update rows appear twice (pre- and post-image),
-            # pure inserts once; only the rewrite files + source are
-            # scanned (real delta gates this on
-            # delta.enableChangeDataFeed — pass change_feed=False to skip)
-            if rewrite:
-                key_set = target.select(*keys)
-                changes = (
-                    target.join(source.select(*keys), on=keys, how="left_semi")
-                    .withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
-                    .unionByName(
-                        source.join(key_set, on=keys, how="left_semi")
-                        .withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
-                    )
-                    .unionByName(
-                        source.join(key_set, on=keys, how="left_anti")
-                        .withColumn(CHANGE_TYPE_COL, F.lit("insert"))
-                    )
-                )
-            else:
-                changes = source.select(*out_cols).withColumn(
-                    CHANGE_TYPE_COL, F.lit("insert")
-                )
-            if mapping:
-                # CDC files carry PHYSICAL names (rename-stable)
-                changes = changes.select(
-                    *[F.col(lg).alias(ph) for lg, ph in mapping.items()],
-                    CHANGE_TYPE_COL,
-                )
-            cdc_adds = _write_cdc_files(changes, table_path)
-    if dv_mode:
-        protocol = _protocol_action(meta, dv=True, prior=state.get("protocol"))
-        remove_actions = dv_removes
-        re_add_actions = dv_re_adds
-    else:
-        protocol = _protocol_action(meta, prior=state.get("protocol"))
-        remove_actions = [
-            {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
-            for p in rewrite
-        ]
-        re_add_actions = []
+            # pure inserts once (real delta gates this on
+            # delta.enableChangeDataFeed — pass change_feed=False to skip).
+            # CDC files carry PHYSICAL names (rename-stable)
+            cdc_adds = _write_data_files(
+                _to_physical(changes, mapping), table_path, change_data=True
+            )
     actions: list[dict] = [
         {"commitInfo": {"operation": "MERGE", "timestamp": now_ms}},
-        protocol,
+        _protocol_action(meta, dv=dv_mode, prior=state.get("protocol")),
         {"metaData": meta},
         # SetTransaction watermarks ride the data commit (same contract
         # as write(txn=...): exactly-once consumed-version bookkeeping)
@@ -1647,8 +1723,8 @@ def merge(
             {"txn": {"appId": k, "version": int(v)}}
             for k, v in sorted((txn or {}).items())
         ),
-        *remove_actions,
-        *re_add_actions,
+        *removes,
+        *re_adds,
         *({"add": a} for a in adds),
         *({"cdc": c} for c in cdc_adds),
     ]
@@ -1717,6 +1793,17 @@ def txn_append(
     return version
 
 
+# (column, op, literal) filter triples as Spark predicates (DELETE/UPDATE)
+_FILTER_OPS = {
+    "<": lambda c, v: c < v,
+    "<=": lambda c, v: c <= v,
+    ">": lambda c, v: c > v,
+    ">=": lambda c, v: c >= v,
+    "=": lambda c, v: c == v,
+    "==": lambda c, v: c == v,
+}
+
+
 def delete(
     spark: SparkSession,
     table_path: str,
@@ -1756,14 +1843,6 @@ def delete(
     contain the rows — contrast ``plans/runner.py:erase``, which must
     rewrite every table wholesale when keys are scattered. Real delta
     works identically (file-skipping + copy-on-write + one commit)."""
-    _OPS = {
-        "<": lambda c, v: c < v,
-        "<=": lambda c, v: c <= v,
-        ">": lambda c, v: c > v,
-        ">=": lambda c, v: c >= v,
-        "=": lambda c, v: c == v,
-        "==": lambda c, v: c == v,
-    }
     # capture the snapshot version ONCE and commit at snapshot+1 (see
     # merge: a concurrent commit must fail the O_EXCL create, not be
     # silently clobbered)
@@ -1783,7 +1862,7 @@ def delete(
     cdc_adds: list[dict] = []
     match = F.lit(True)
     for col, op, lit in filters:
-        match = match & _OPS[op](F.col(col), F.lit(lit))
+        match = match & _FILTER_OPS[op](F.col(col), F.lit(lit))
     if deletion_vectors and not change_feed:
         # a DV commit's adds/removes do NOT describe row-level change
         # (the re-added file still contains the dead rows) — without cdc
@@ -1813,20 +1892,14 @@ def delete(
         # NULL predicate = row does NOT match = row is KEPT (SQL DELETE)
         kept = df.filter(F.coalesce(~match, F.lit(True)))
         if change_feed:
+            # CDC files carry PHYSICAL names, like data files — a later
+            # rename must not orphan them
             deleted = df.filter(F.coalesce(match, F.lit(False)))
-            if mapping:
-                # CDC files carry PHYSICAL names, like data files — a
-                # later rename must not orphan them
-                deleted = deleted.select(
-                    *[F.col(lg).alias(ph) for lg, ph in mapping.items()]
-                )
-            cdc_adds = _write_cdc_files(
-                deleted.withColumn(CHANGE_TYPE_COL, F.lit("delete")),
-                table_path,
+            deleted = deleted.withColumn(CHANGE_TYPE_COL, F.lit("delete"))
+            cdc_adds = _write_data_files(
+                _to_physical(deleted, mapping), table_path, change_data=True
             )
-        if mapping:
-            kept = _to_physical(kept, mapping)
-        adds = _write_data_files(kept, table_path, pcols)
+        adds = _write_data_files(_to_physical(kept, mapping), table_path, pcols)
     now_ms = int(time.time() * 1000)
     version = snap_version + 1
     actions: list[dict] = [
@@ -1869,13 +1942,11 @@ def _delete_with_dv(
     dv_name, counts = _write_tombstones(spark, table_path, candidates, matched)
     cdc_adds: list[dict] = []
     if change_feed:
-        deleted = matched.drop(_DV_FILE_COL, _DV_ROW_COL)
-        if mapping:
-            deleted = deleted.select(
-                *[F.col(lg).alias(ph) for lg, ph in mapping.items()]
-            )
-        cdc_adds = _write_cdc_files(
-            deleted.withColumn(CHANGE_TYPE_COL, F.lit("delete")), table_path
+        deleted = matched.drop(_DV_FILE_COL, _DV_ROW_COL).withColumn(
+            CHANGE_TYPE_COL, F.lit("delete")
+        )
+        cdc_adds = _write_data_files(
+            _to_physical(deleted, mapping), table_path, change_data=True
         )
     now_ms = int(time.time() * 1000)
     removes, re_adds, touched = _dv_repoint_actions(
@@ -1946,12 +2017,12 @@ def _write_tombstones(
     # the directory; pyarrow's dataset reader skips _SUCCESS markers)
     total = sum(counts.values())
     n_shards = min(32, 1 + total // _DV_SHARD_ROWS)
-    tomb_dir = os.path.join(table_path, f"_staging_{uuid.uuid4().hex}")
-    new_tomb.repartition(n_shards, "file_name").write.parquet(tomb_dir)
-    new_tomb.unpersist()
     dv_name = f"dv-{uuid.uuid4().hex}"
     dest = os.path.join(table_path, dv_name)
-    os.rename(tomb_dir, dest)
+    with _staging_dir(table_path) as tomb_dir:
+        new_tomb.repartition(n_shards, "file_name").write.parquet(tomb_dir)
+        new_tomb.unpersist()
+        os.rename(tomb_dir, dest)
     for f in os.listdir(dest):
         # drop _SUCCESS/CRC markers so the sidecar directory holds only
         # parquet shards (pyarrow's dataset reader reads it verbatim)
@@ -2127,11 +2198,7 @@ def optimize(
         # mean a task writes two bucket directories), partitionBy splits
         # the task output one file per bucket, and _write_data_files
         # strips the __zb segment from the committed paths/partitionValues.
-        part = snap.withColumn("__zb", bucket)
-        if mapping:
-            part = part.select(
-                *[F.col(lg).alias(ph) for lg, ph in mapping.items()], "__zb"
-            )
+        part = _to_physical(snap.withColumn("__zb", bucket), mapping)
         part = part.repartition(n_files, F.col("__zb"))
         adds = _write_data_files(
             part,
@@ -2143,9 +2210,7 @@ def optimize(
         # coalesce (not repartition): shuffle-free — each task reads a
         # run of small files and writes one compacted file, exactly what
         # OPTIMIZE's bin-packing does on a cluster
-        part = snap.coalesce(n_files)
-        if mapping:
-            part = _to_physical(part, mapping)
+        part = _to_physical(snap.coalesce(n_files), mapping)
         adds = _write_data_files(part, table_path, pcols)
     now_ms = int(time.time() * 1000)
     for a in adds:
@@ -2175,8 +2240,8 @@ def vacuum(
     """Delete unreferenced data files.
 
     Default (``retain_versions=None``): only never-committed garbage goes
-    (crashed writers' staging leftovers) — every committed version stays
-    time-travelable.
+    (crashed writers' files and ``_staging_*`` leftovers) — every
+    committed version stays time-travelable.
 
     With ``retain_versions=N``: keep only the files some version in the
     last N+1 commits still references; files that exist solely for OLDER
@@ -2196,7 +2261,9 @@ def vacuum(
     WERE committed but fell out of the retention horizon are deleted
     regardless of age (their fate is governed by ``retain_versions``).
     Pass ``grace_ms=0`` only when no concurrent writer can exist (tests,
-    single-process maintenance)."""
+    single-process maintenance). A ``_staging_*`` directory goes whole
+    once no writer holds its lock (``_staging_dir``) and nothing in it
+    has changed for ``grace_ms``; its files are reported one by one."""
     versions = _list_versions(table_path)
     if versions:
         _assert_writable(_current_protocol(table_path), table_path)
@@ -2259,18 +2326,28 @@ def vacuum(
     removed = []
     now_ms = int(time.time() * 1000)
     for dirpath, dirs, files in os.walk(table_path):
-        # never descend into the log or a live writer's staging dir
-        dirs[:] = [
-            d
-            for d in dirs
-            if d != _LOG_DIR and not d.startswith("_staging_")
-        ]
+        for d in [d for d in dirs if d.startswith("_staging_")]:
+            full = os.path.join(dirpath, d)
+            if _staging_live(full):
+                continue
+            walked = list(os.walk(full))  # no writer: nothing changes under us
+            inside = [os.path.join(dp, n) for dp, _ds, fs in walked for n in fs]
+            newest = max(
+                map(os.path.getmtime, [w[0] for w in walked] + inside), default=0
+            )
+            if now_ms - newest * 1000 >= grace_ms:
+                shutil.rmtree(full, ignore_errors=True)
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(full + ".lock")
+                for f in inside:
+                    removed.append(os.path.relpath(f, table_path).replace(os.sep, "/"))
+        # never descend into the log or a staging dir
+        dirs[:] = [d for d in dirs if d != _LOG_DIR and not d.startswith("_staging_")]
         for f in files:
             if not f.endswith(".parquet"):
                 continue
             full = os.path.join(dirpath, f)
-            rel = os.path.relpath(full, table_path)
-            rel = rel.replace(os.sep, "/")
+            rel = os.path.relpath(full, table_path).replace(os.sep, "/")
             # a referenced deletionVector path may be a sidecar DIRECTORY
             # of shards — its parts are referenced through the directory
             if rel in referenced or os.path.dirname(rel) in referenced:
@@ -2338,41 +2415,42 @@ def cleanup_expired_logs(table_path: str, retain_versions: int) -> list[int]:
     return doomed
 
 
-def _write_cdc_files(df: DataFrame, table_path: str) -> list[dict]:
-    """Write change rows (data columns + ``_change_type``) as parquet
-    under ``_change_data/`` and return the ``cdc`` action payloads. CDC
-    files are NOT part of any snapshot (``_apply_action`` ignores the
-    action), so they carry ``dataChange: false`` per the spec."""
-    staging = os.path.join(table_path, f"_staging_{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(staging)
-    cdir = os.path.join(table_path, _CDC_DIR)
-    os.makedirs(cdir, exist_ok=True)
-    out: list[dict] = []
-    for f in os.listdir(staging):
-        if not f.endswith(".parquet"):
-            continue
-        unique = f"cdc-{uuid.uuid4().hex}.parquet"
-        dest = os.path.join(cdir, unique)
-        os.rename(os.path.join(staging, f), dest)
-        stats = _file_stats(dest)
-        if stats is not None and stats["numRecords"] == 0:
-            os.remove(dest)  # empty part files are never committed
-            continue
-        out.append(
-            {
-                "path": f"{_CDC_DIR}/{unique}",
-                "partitionValues": {},
-                "size": os.path.getsize(dest),
-                "dataChange": False,
-            }
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-    return out
-
-
 def _commit_actions(table_path: str, version: int) -> list[dict]:
     with open(_version_file(table_path, version)) as f:
         return [json.loads(line) for line in f if line.strip()]
+
+
+def _data_changes(actions: list[dict], parent_active: dict) -> tuple[dict, dict]:
+    """A cdc-less commit's derived change files: ({removed path: its add
+    payload in the PARENT snapshot}, {added path: its add payload}) over
+    the dataChange removes and adds. Removed rows must be read through
+    the parent's deletion vector and added rows through their own, or
+    tombstoned rows resurrect; a remove+re-add of one path whose
+    tombstone cardinality is unchanged is a pure repoint (tombstone sets
+    only grow, so equal cardinality = equal set = no content change —
+    e.g. a DV DML whose predicate grazed a tombstoned file but matched
+    zero rows, or RESTORE re-adding an unchanged payload) and drops out
+    of both sides. Returns fresh dicts: ``parent_active`` is the log
+    walker's live state and folds forward on the next commit."""
+    removes = {
+        a["remove"]["path"]: parent_active.get(a["remove"]["path"])
+        or {"path": a["remove"]["path"]}
+        for a in actions
+        if "remove" in a and a["remove"].get("dataChange", True)
+    }
+    adds = {
+        a["add"]["path"]: a["add"]
+        for a in actions
+        if "add" in a and a["add"].get("dataChange", True)
+    }
+
+    def card(payload: dict) -> int:
+        return (payload.get("deletionVector") or {}).get("cardinality", 0)
+
+    for p in set(removes) & set(adds):
+        if card(removes[p]) == card(adds[p]):
+            del removes[p], adds[p]
+    return removes, adds
 
 
 def changes_missing_files(
@@ -2394,41 +2472,14 @@ def changes_missing_files(
     for _v, actions, parent_active in _walk_commits(
         table_path, starting_version, ending_version
     ):
-        cdc = [a["cdc"]["path"] for a in actions if "cdc" in a]
-        if cdc:
-            paths = list(cdc)
-        else:
-            # mirror read_changes' derived path exactly, including the
-            # DV-repoint skip (a remove+re-add pair with unchanged
-            # tombstone cardinality is never scanned)
-            removes = [
-                a["remove"]["path"]
-                for a in actions
-                if "remove" in a and a["remove"].get("dataChange", True)
-            ]
-            add_map = {
-                a["add"]["path"]: a["add"]
-                for a in actions
-                if "add" in a and a["add"].get("dataChange", True)
-            }
-
-            def _card(payload: dict | None) -> int:
-                return ((payload or {}).get("deletionVector") or {}).get(
-                    "cardinality", 0
-                )
-
-            for p in sorted(set(removes) & set(add_map)):
-                if _card(parent_active.get(p)) == _card(add_map[p]):
-                    removes.remove(p)
-                    del add_map[p]
-            paths = removes + sorted(add_map)
-            # removed rows are read through the PARENT snapshot's DV
-            # sidecars, added rows through their own add's DV
-            for payload in (
-                *(parent_active.get(p) for p in removes),
-                *add_map.values(),
-            ):
-                dv = (payload or {}).get("deletionVector") or {}
+        paths = [a["cdc"]["path"] for a in actions if "cdc" in a]
+        if not paths:
+            # mirror read_changes' derived path exactly, DV sidecars and
+            # repoint skip included
+            removes, adds = _data_changes(actions, parent_active)
+            for p, payload in (*removes.items(), *adds.items()):
+                paths.append(p)
+                dv = payload.get("deletionVector") or {}
                 if dv.get("path"):
                     paths.append(dv["path"])
         for p in paths:
@@ -2494,9 +2545,10 @@ def read_changes(
                 scan_schema.fields
                 + [StructField(CHANGE_TYPE_COL, StringType(), True)]
             )
-            df = spark.read.schema(cdc_schema).parquet(
-                *[os.path.join(table_path, c["path"]) for c in cdc]
-            )
+            with _log_listed(spark):
+                df = spark.read.schema(cdc_schema).parquet(
+                    *[os.path.join(table_path, c["path"]) for c in cdc]
+                )
             if mapping_now:
                 df = df.select(
                     *[
@@ -2507,44 +2559,12 @@ def read_changes(
                 )
             frames.append(df.withColumn(COMMIT_VERSION_COL, F.lit(v)))
             continue
-        removes = [
-            a["remove"]["path"]
-            for a in actions
-            if "remove" in a and a["remove"].get("dataChange", True)
-        ]
-        add_map = {
-            a["add"]["path"]: a["add"]
-            for a in actions
-            if "add" in a and a["add"].get("dataChange", True)
-        }
-        # The derived path must honor deletion vectors, or it resurrects
-        # tombstoned rows (reading a DV file RAW yields its dead rows):
-        # - a removed file's rows are read through the DV it carried in
-        #   the PARENT snapshot (replayed at v-1, metadata-rate);
-        # - an added file's rows are read through its own add's DV;
-        # - a remove+re-add of the same path whose tombstone cardinality
-        #   is unchanged is a pure repoint (tombstone sets only grow, so
-        #   equal cardinality = equal set = no content change): skip both
-        #   sides — e.g. a DV DML whose predicate grazed a tombstoned
-        #   file but matched zero rows, or RESTORE re-adding an
-        #   unchanged payload.
-        # snapshot only the removed paths' parent payloads: parent_active
-        # is the walker's live state and folds forward on the next commit
-        pre_active = {p: parent_active[p] for p in removes if p in parent_active}
-
-        def _dv_card(payload: dict | None) -> int:
-            return ((payload or {}).get("deletionVector") or {}).get(
-                "cardinality", 0
-            )
-
-        for p in sorted(set(removes) & set(add_map)):
-            if _dv_card(pre_active.get(p)) == _dv_card(add_map[p]):
-                removes.remove(p)
-                del add_map[p]
+        # the derived path honors deletion vectors (reading a DV file RAW
+        # would resurrect its dead rows) and skips pure repoints
+        removes, add_map = _data_changes(actions, parent_active)
         if removes:
-            kept_rm = {p: pre_active.get(p, {"path": p}) for p in removes}
             frames.append(
-                _scan_active(spark, table_path, meta_now, kept_rm)
+                _scan_active(spark, table_path, meta_now, removes)
                 .withColumn(CHANGE_TYPE_COL, F.lit("delete"))
                 .withColumn(COMMIT_VERSION_COL, F.lit(v))
             )
@@ -2841,14 +2861,6 @@ def update(
     when ``change_feed`` (required for DV mode, like delete/merge).
 
     Returns (version, files untouched, files rewritten/re-pointed)."""
-    _OPS = {
-        "<": lambda c, v: c < v,
-        "<=": lambda c, v: c <= v,
-        ">": lambda c, v: c > v,
-        ">=": lambda c, v: c >= v,
-        "=": lambda c, v: c == v,
-        "==": lambda c, v: c == v,
-    }
     if deletion_vectors and not change_feed:
         raise ValueError("deletion_vectors=True requires change_feed=True")
     snap_version = _list_versions(table_path)[-1]
@@ -2883,7 +2895,7 @@ def update(
             candidates[p] = active[p]
     match = F.lit(True)
     for col, op, lit in filters:
-        match = match & _OPS[op](F.col(col), F.lit(lit))
+        match = match & _FILTER_OPS[op](F.col(col), F.lit(lit))
 
     def apply_set(df: DataFrame) -> DataFrame:
         # conform each SET expression back to the COMMITTED column type
@@ -2930,9 +2942,7 @@ def update(
                 _remove_sidecar(table_path, dv_name)
             else:
                 adds = _write_data_files(
-                    _to_physical(post, mapping) if mapping else post,
-                    table_path,
-                    pcols or None,
+                    _to_physical(post, mapping), table_path, pcols or None
                 )
         else:
             df = _scan_active(spark, table_path, meta, candidates)
@@ -2950,19 +2960,11 @@ def update(
             )
             touched = len(candidates)
             removes = [
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
+                {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
                 for p in candidates
             ]
             adds = _write_data_files(
-                _to_physical(result, mapping) if mapping else result,
-                table_path,
-                pcols or None,
+                _to_physical(result, mapping), table_path, pcols or None
             )
         if change_feed and touched:
             changes = pre.withColumn(
@@ -2970,12 +2972,9 @@ def update(
             ).unionByName(
                 post.withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
             )
-            if mapping:
-                changes = changes.select(
-                    *[F.col(lg).alias(ph) for lg, ph in mapping.items()],
-                    CHANGE_TYPE_COL,
-                )
-            cdc_adds = _write_cdc_files(changes, table_path)
+            cdc_adds = _write_data_files(
+                _to_physical(changes, mapping), table_path, change_data=True
+            )
     if not touched:
         return snap_version, len(untouched) + len(candidates), 0
     proto = _protocol_action(

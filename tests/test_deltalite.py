@@ -641,8 +641,8 @@ def test_merge_concurrent_commit_raises_not_clobbers(spark, tdir, monkeypatch):
     orig = deltalite._write_data_files
     state = {"raced": False}
 
-    def sneaky(df, table_path, partition_by=None):
-        adds = orig(df, table_path, partition_by)
+    def sneaky(df, table_path, partition_by=None, **kw):
+        adds = orig(df, table_path, partition_by, **kw)
         if not state["raced"]:
             state["raced"] = True
             deltalite.write(

@@ -1,0 +1,141 @@
+"""DeltaLite MERGE parity (sources/deltalite.py ``merge``), default tier:
+copy-on-write and deletion-vector merges on the edge cases the fused
+plan must keep — final rows, the commit's file actions and the change
+feed of that commit, by ``_change_type``."""
+
+from __future__ import annotations
+
+import os
+import tempfile
+from collections import Counter
+
+import pytest
+
+from dbt_spark_models_spark.sources import deltalite
+
+MODES = pytest.mark.parametrize("dv", [False, True], ids=["cow", "dv"])
+
+
+@pytest.fixture()
+def tdir():
+    with tempfile.TemporaryDirectory(prefix="deltalite-merge-") as d:
+        yield d
+
+
+def _df(spark, rows, ddl="k int, v string"):
+    return spark.createDataFrame(rows, ddl).coalesce(1)
+
+
+def _table(spark, path, *files):
+    """One commit per row list, so each list is exactly one data file;
+    returns the file paths in list order."""
+    paths: list[str] = []
+    for i, rows in enumerate(files):
+        deltalite.write(spark, _df(spark, rows), path, "append" if i else "overwrite")
+        paths += sorted(set(deltalite._replay_state(path)["active"]) - set(paths))
+    return paths
+
+
+def _merge(spark, path, rows, dv, ddl="k int, v string"):
+    """Merge ``rows`` and return (rows after, removed paths, re-added
+    paths, count of new paths, change rows of the merge commit)."""
+    before = set(deltalite._replay_state(path)["active"])
+    v = deltalite.merge(spark, _df(spark, rows, ddl), path, ["k"], deletion_vectors=dv)
+    actions = deltalite._commit_actions(path, v)
+    removed = {a["remove"]["path"] for a in actions if "remove" in a}
+    added = {a["add"]["path"] for a in actions if "add" in a}
+    changes = Counter(
+        (r._change_type, r.k, r.v)
+        for r in deltalite.read_changes(spark, path, v, v).collect()
+    )
+    got = Counter((r.k, r.v) for r in deltalite.read(spark, path).collect())
+    return got, removed, added & before, len(added - before), changes
+
+
+@MODES
+def test_updates_and_inserts(spark, tdir, dv):
+    low, _high = _table(spark, tdir, [(1, "a"), (2, "b")], [(3, "c"), (4, "d")])
+    got, removed, readded, n_new, changes = _merge(
+        spark, tdir, [(2, "B"), (5, "e")], dv
+    )
+    assert got == Counter({(1, "a"): 1, (2, "B"): 1, (3, "c"): 1, (4, "d"): 1, (5, "e"): 1})
+    # only the file holding key 2 is touched: rewritten (COW) or
+    # re-pointed at a tombstone sidecar (DV); the 3-4 file keeps its bytes
+    assert removed == {low}
+    assert readded == (removed if dv else set())
+    # DV appends the source as one file; COW also writes the rewritten
+    # file's survivors together in one file of their own (no key shuffle)
+    assert n_new == (1 if dv else 2)
+    assert changes == Counter(
+        {("update_preimage", 2, "b"): 1, ("update_postimage", 2, "B"): 1, ("insert", 5, "e"): 1}
+    )
+
+
+@MODES
+def test_null_keys_never_match(spark, tdir, dv):
+    _table(spark, tdir, [(None, "tn"), (1, "a")])
+    got, removed, _, _, changes = _merge(spark, tdir, [(None, "sn"), (1, "A")], dv)
+    assert got == Counter({(None, "tn"): 1, (None, "sn"): 1, (1, "A"): 1})
+    assert len(removed) == 1
+    assert changes == Counter(
+        {("update_preimage", 1, "a"): 1, ("update_postimage", 1, "A"): 1, ("insert", None, "sn"): 1}
+    )
+
+
+@MODES
+def test_all_null_key_source_is_inserted(spark, tdir, dv):
+    """A source whose key is NULL on every row matches nothing and is
+    inserted whole (it used to be dropped without a word)."""
+    _table(spark, tdir, [(None, "tn"), (1, "a")])
+    got, removed, readded, n_new, changes = _merge(spark, tdir, [(None, "sn")], dv)
+    assert got == Counter({(None, "tn"): 1, (1, "a"): 1, (None, "sn"): 1})
+    assert (removed, readded, n_new) == (set(), set(), 1)
+    assert changes == Counter({("insert", None, "sn"): 1})
+
+
+@MODES
+def test_duplicate_keys_already_in_target(spark, tdir, dv):
+    _table(spark, tdir, [(1, "a"), (1, "a2"), (2, "b")])
+    got, removed, _, _, changes = _merge(spark, tdir, [(1, "X")], dv)
+    assert got == Counter({(1, "X"): 1, (2, "b"): 1})
+    assert len(removed) == 1
+    assert changes == Counter(
+        {("update_preimage", 1, "a"): 1, ("update_preimage", 1, "a2"): 1, ("update_postimage", 1, "X"): 1}
+    )
+
+
+@MODES
+@pytest.mark.parametrize("key", [500, 5], ids=["disjoint", "stats_grazed"])
+def test_insert_only_rewrites_nothing(spark, tdir, dv, key):
+    _table(spark, tdir, [(0, "a"), (10, "b")])
+    got, removed, readded, n_new, changes = _merge(spark, tdir, [(key, "new")], dv)
+    assert got == Counter({(0, "a"): 1, (10, "b"): 1, (key, "new"): 1})
+    assert (removed, readded, n_new) == (set(), set(), 1)
+    assert changes == Counter({("insert", key, "new"): 1})
+    assert not any(f.startswith("dv-") for f in os.listdir(tdir))
+
+
+@MODES
+def test_empty_source_commits_nothing(spark, tdir, dv):
+    _table(spark, tdir, [(1, "a")])
+    got, removed, readded, n_new, changes = _merge(spark, tdir, [], dv)
+    assert got == Counter({(1, "a"): 1})
+    assert (removed, readded, n_new, changes) == (set(), set(), 0, Counter())
+
+
+@MODES
+def test_duplicate_source_keys_rejected(spark, tdir, dv):
+    _table(spark, tdir, [(1, "a")])
+    with pytest.raises(ValueError, match="duplicate"):
+        _merge(spark, tdir, [(2, "x"), (2, "y")], dv)
+    assert deltalite.latest_version(tdir) == 0
+
+
+def test_keys_colliding_after_cast_rejected(spark, tdir):
+    """The duplicate check runs on the source conformed to the committed
+    schema: "1" and "01" are distinct strings but the same int key, so
+    the merge refuses instead of inserting key 1 twice."""
+    _table(spark, tdir, [(5, "a")])
+    with pytest.raises(ValueError, match="duplicate"):
+        _merge(spark, tdir, [("1", "x"), ("01", "y")], False, "k string, v string")
+    assert deltalite.latest_version(tdir) == 0
