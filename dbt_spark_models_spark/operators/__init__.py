@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,6 +44,61 @@ def run_scope(*parts: str) -> str:
 
     key = "|".join(parts) + f"|{os.getpid()}"
     return hashlib.md5(key.encode()).hexdigest()[:10]
+
+
+GATE_ROOT = "/tmp/spark_models_engine"
+
+# (session id, db) -> what a gate's build returned; recorded only once the
+# build has returned
+_FINISHED: dict[tuple[int, str], Any] = {}
+
+
+def gate_db(
+    spark: SparkSession,
+    prefix: str,
+    sf_dir: str,
+    *scope: str,
+    probe: str,
+    build: Callable[[str], Any],
+) -> tuple[str, Any]:
+    """``(db, build(db))`` for a gate database holding a finished build,
+    built at most once per session.
+
+    ``db`` is ``prefix + run_scope(sf_dir, *scope)``, located at
+    ``GATE_ROOT/<db>``. A later call reuses it only while its build is
+    recorded as finished AND ``probe`` still exists (a table in ``db``, or
+    the DeltaLite model of that name). Otherwise the db is dropped, its
+    location cleared (the in-memory catalog cannot CASCADE tables a
+    previous session created there) and recreated, and ``build(db)`` runs.
+    A build that raises is never recorded, so a half-built db whose probe
+    already exists is rebuilt, not served."""
+    import shutil
+
+    from dbt_spark_models_spark.plans import deltalite_tables as dlt
+
+    db = prefix + run_scope(sf_dir, *scope)
+    key = (id(spark), db)
+    if key in _FINISHED and (
+        spark.catalog.tableExists(f"{db}.{probe}")
+        or spark.catalog.tableExists(dlt.view_name(db, probe))
+    ):
+        return db, _FINISHED[key]
+    _FINISHED.pop(key, None)
+    location = f"{GATE_ROOT}/{db}"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    shutil.rmtree(location, ignore_errors=True)
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{location}'")
+    _FINISHED[key] = build(db)
+    return db, _FINISHED[key]
+
+
+def require_success(results: list, step: str) -> list:
+    """``results`` (a list of ``RunResult``) unchanged, or a RuntimeError
+    naming ``step`` and every result whose status is not success."""
+    bad = [r for r in results if r.status != "success"]
+    if bad:
+        raise RuntimeError(f"{step} failed: {bad}")
+    return results
 
 
 def query(name: str, oracle: str | None = None):

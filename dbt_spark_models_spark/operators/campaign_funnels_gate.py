@@ -21,20 +21,17 @@ the medicine-group expansion is a broadcast self-join of a ≤10-row dict.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dbt_spark_models_spark.operators import query, run_scope
+from dbt_spark_models_spark.operators import gate_db, query, require_success
 
 _PROJECT_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     "examples",
     "campaign_funnels",
 )
-
-_BUILD_CACHE: dict[tuple[int, str], str] = {}
 
 _RUN_DATE = "2024-01-30"
 _WINDOW_DAYS = 14
@@ -43,30 +40,19 @@ _WINDOW_DAYS = 14
 def _build(spark: SparkSession, sf_dir: str) -> str:
     from dbt_spark_models_spark.plans import Project, Runner
 
-    db = "campaign_funnels_" + run_scope(sf_dir)
-    key = (id(spark), sf_dir)
-    if _BUILD_CACHE.get(key) == db and spark.catalog.tableExists(
-        f"{db}.campaign_funnels"
-    ):
-        return db
-    import shutil
+    def build(db: str) -> None:
+        r = Runner(
+            spark=spark,
+            project=Project.load(_PROJECT_DIR),
+            database=db,
+            target_name="dev",
+            vars={"sf_dir": sf_dir, "run_date": _RUN_DATE},
+        )
+        require_success(r.seed() + r.run() + r.test(), "campaign_funnels build")
 
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    shutil.rmtree(f"/tmp/spark_models_engine/{db}", ignore_errors=True)
-    spark.sql(f"CREATE DATABASE {db} LOCATION '/tmp/spark_models_engine/{db}'")
-    project = Project.load(_PROJECT_DIR)
-    r = Runner(
-        spark=spark,
-        project=project,
-        database=db,
-        target_name="dev",
-        vars={"sf_dir": sf_dir, "run_date": _RUN_DATE},
+    db, _ = gate_db(
+        spark, "campaign_funnels_", sf_dir, probe="campaign_funnels", build=build
     )
-    results = r.seed() + r.run() + r.test()
-    bad = [x for x in results if x.status != "success"]
-    if bad:
-        raise RuntimeError(f"campaign_funnels build failed: {bad}")
-    _BUILD_CACHE[key] = db
     return db
 
 
@@ -295,51 +281,38 @@ def engine_campaign_funnels_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-_INCR_BUILD_CACHE: dict[tuple[int, str], str] = {}
-
-
 def _build_incremental(spark: SparkSession, sf_dir: str) -> str:
     """Full build @ 2024-01-22, incremental @ 2024-01-30 — the rolling
     window advances and run 2 insert-overwrites only its own window's
     event_dt partitions."""
     from dbt_spark_models_spark.plans import Project, Runner
 
-    db = "campaign_incr_" + run_scope(sf_dir)
-    key = (id(spark), sf_dir)
-    if _INCR_BUILD_CACHE.get(key) == db and spark.catalog.tableExists(
-        f"{db}.campaign_funnels"
-    ):
-        return db
-    import shutil
+    def build(db: str) -> None:
+        project = Project.load(_PROJECT_DIR)
+        r1 = Runner(
+            spark=spark,
+            project=project,
+            database=db,
+            target_name="dev",
+            vars={"sf_dir": sf_dir, "run_date": "2024-01-22"},
+        )
+        results = r1.seed() + r1.run()
+        r2 = Runner(
+            spark=spark,
+            project=project,
+            database=db,
+            target_name="dev",
+            vars={"sf_dir": sf_dir, "run_date": "2024-01-30"},
+        )
+        res2 = r2.run()
+        require_success(results + res2 + r2.test(), "campaign_funnels incr build")
+        act = {x.node: x.action for x in res2}
+        if act.get("campaign_funnels") != "overwritten_partitions":
+            raise RuntimeError(f"expected insert_overwrite on run 2, got {act}")
 
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    shutil.rmtree(f"/tmp/spark_models_engine/{db}", ignore_errors=True)
-    spark.sql(f"CREATE DATABASE {db} LOCATION '/tmp/spark_models_engine/{db}'")
-    project = Project.load(_PROJECT_DIR)
-    r1 = Runner(
-        spark=spark,
-        project=project,
-        database=db,
-        target_name="dev",
-        vars={"sf_dir": sf_dir, "run_date": "2024-01-22"},
+    db, _ = gate_db(
+        spark, "campaign_incr_", sf_dir, probe="campaign_funnels", build=build
     )
-    results = r1.seed() + r1.run()
-    r2 = Runner(
-        spark=spark,
-        project=project,
-        database=db,
-        target_name="dev",
-        vars={"sf_dir": sf_dir, "run_date": "2024-01-30"},
-    )
-    res2 = r2.run()
-    results += res2 + r2.test()
-    bad = [x for x in results if x.status != "success"]
-    if bad:
-        raise RuntimeError(f"campaign_funnels incr build failed: {bad}")
-    act = {x.node: x.action for x in res2}
-    if act.get("campaign_funnels") != "overwritten_partitions":
-        raise RuntimeError(f"expected insert_overwrite on run 2, got {act}")
-    _INCR_BUILD_CACHE[key] = db
     return db
 
 

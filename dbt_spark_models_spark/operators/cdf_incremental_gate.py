@@ -23,11 +23,10 @@ is |change window| + changed keys' rows, never the full upstream.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dbt_spark_models_spark.operators import query, run_scope
+from dbt_spark_models_spark.operators import gate_db, query, require_success
 
 _EXAMPLE_PROJECT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -35,21 +34,16 @@ _EXAMPLE_PROJECT = os.path.join(
     "cdf_incremental",
 )
 
-# (session id, sf_dir) -> {"db": ..., "run2_version": ..., "watermarks": [...]}
-_CACHE: dict[tuple[int, str], dict] = {}
-
-
 def _shared_build(spark: SparkSession, sf_dir: str) -> dict:
-    from dbt_spark_models_spark.plans import deltalite_tables as dlt
-
-    key = (id(spark), sf_dir)
-    db = "cdf_inc_" + run_scope(sf_dir)
-    state = _CACHE.get(key)
-    view = dlt.view_name(db, "cust_rev_cdc")
-    if state and state["db"] == db and spark.catalog.tableExists(view):
-        return state
-    state = _build(spark, sf_dir, db)
-    _CACHE[key] = state
+    """{"db", "path", "monthly_path", "run2_version",
+    "monthly_run2_version", "watermarks"} of the three-run build."""
+    _, state = gate_db(
+        spark,
+        "cdf_inc_",
+        sf_dir,
+        probe="cust_rev_cdc",
+        build=lambda db: _build(spark, sf_dir, db),
+    )
     return state
 
 
@@ -67,11 +61,6 @@ def _build(spark: SparkSession, sf_dir: str, db: str) -> dict:
     from dbt_spark_models_spark.plans import deltalite_tables as dlt
     from dbt_spark_models_spark.sources import deltalite
 
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    shutil.rmtree(f"/tmp/spark_models_cdf_inc/{db}", ignore_errors=True)
-    spark.sql(
-        f"CREATE DATABASE {db} LOCATION '/tmp/spark_models_cdf_inc/{db}'"
-    )
     project = Project.load(_EXAMPLE_PROJECT)
     down_path = None
     watermarks: list[int] = []
@@ -89,9 +78,7 @@ def _build(spark: SparkSession, sf_dir: str, db: str) -> dict:
             database=db,
             vars={"sf_dir": sf_dir, **run_vars},
         )
-        results = runner.run()
-        if any(r.status != "success" for r in results):
-            raise RuntimeError(f"cdf run {i + 1} failed: {results}")
+        require_success(runner.run(), f"cdf run {i + 1}")
         down_path = dlt.table_path(spark, db, "cust_rev_cdc")
         # the watermark rides each consumer commit as a SetTransaction
         # (atomic with the data, r11; was a tblproperty before)
@@ -107,9 +94,7 @@ def _build(spark: SparkSession, sf_dir: str, db: str) -> dict:
             monthly_run2_version = deltalite.latest_version(
                 dlt.table_path(spark, db, "monthly_rev_cdc")
             )
-    checks = runner.test()
-    if any(t.status != "success" for t in checks):
-        raise RuntimeError(f"cdf checks failed: {checks}")
+    require_success(runner.test(), "cdf checks")
     return {
         "db": db,
         "path": down_path,

@@ -21,13 +21,11 @@ delta semantics — ACID commits, upserts, history — without Delta jars.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dbt_spark_models_spark.operators import query, run_scope
+from dbt_spark_models_spark.operators import gate_db, query, require_success
 
 _EXAMPLE_PROJECT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -38,19 +36,15 @@ _EXAMPLE_PROJECT = os.path.join(
 _CUTOFF1 = "1996-01-01"  # first build: orders strictly before this
 _CUTOFF2 = "1995-07-01"  # incremental: months >= this are REPLACED
 
-# (session id, sf_dir) -> db of an already-built delta mart
-_CACHE: dict[tuple[int, str], str] = {}
-
 
 def _shared_delta_mart(spark: SparkSession, sf_dir: str) -> str:
-    from dbt_spark_models_spark.plans import deltalite_tables as dlt
-
-    db = "delta_mart_" + run_scope(sf_dir)
-    key = (id(spark), sf_dir)
-    view = dlt.view_name(db, "customer_rollup")
-    if _CACHE.get(key) != db or not spark.catalog.tableExists(view):
-        _build(spark, sf_dir, db)
-        _CACHE[key] = db
+    db, _ = gate_db(
+        spark,
+        "delta_mart_",
+        sf_dir,
+        probe="customer_rollup",
+        build=lambda db: _build(spark, sf_dir, db),
+    )
     return db
 
 
@@ -62,11 +56,6 @@ def _build(spark: SparkSession, sf_dir: str, db: str) -> None:
     customer active after _CUTOFF2. Then one snapshot batch + checks."""
     from dbt_spark_models_spark.plans import Project, Runner
 
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    shutil.rmtree(f"/tmp/spark_models_delta_mart/{db}", ignore_errors=True)
-    spark.sql(
-        f"CREATE DATABASE {db} LOCATION '/tmp/spark_models_delta_mart/{db}'"
-    )
     project = Project.load(_EXAMPLE_PROJECT)
     r1 = Runner(
         spark=spark,
@@ -74,24 +63,16 @@ def _build(spark: SparkSession, sf_dir: str, db: str) -> None:
         database=db,
         vars={"sf_dir": sf_dir, "cutoff_date": _CUTOFF1},
     )
-    run1 = r1.run()
-    if any(r.status != "success" for r in run1):
-        raise RuntimeError(f"first delta run failed: {run1}")
+    require_success(r1.run(), "first delta run")
     r2 = Runner(
         spark=spark,
         project=project,
         database=db,
         vars={"sf_dir": sf_dir, "cutoff_date": _CUTOFF2},
     )
-    run2 = r2.run()
-    if any(r.status != "success" for r in run2):
-        raise RuntimeError(f"incremental delta run failed: {run2}")
-    snaps = r2.snapshot(run_ts="2024-02-01 00:00:00")
-    if any(r.status != "success" for r in snaps):
-        raise RuntimeError(f"delta snapshot failed: {snaps}")
-    tests = r2.test()
-    if any(t.status != "success" for t in tests):
-        raise RuntimeError(f"delta checks failed: {tests}")
+    require_success(r2.run(), "incremental delta run")
+    require_success(r2.snapshot(run_ts="2024-02-01 00:00:00"), "delta snapshot")
+    require_success(r2.test(), "delta checks")
 
 
 _STG = """
@@ -326,9 +307,6 @@ def engine_deltalite_snapshot_tier(spark: SparkSession, sf_dir: str) -> DataFram
 
 # --- in-process DAG-parallel execution (VERDICT r10 #1) -----------------
 
-_PAR_CACHE: dict[tuple[int, str], str] = {}
-
-
 def _shared_parallel_mart(spark: SparkSession, sf_dir: str) -> str:
     """The same two-run delta_mart build as _shared_delta_mart, executed
     by the threads=4 ready-set scheduler (plans/runner.py _run_parallel):
@@ -337,33 +315,24 @@ def _shared_parallel_mart(spark: SparkSession, sf_dir: str) -> str:
     failure-skip semantics and per-model inputs are identical to serial,
     so the final state must be bit-equal."""
     from dbt_spark_models_spark.plans import Project, Runner
-    from dbt_spark_models_spark.plans import deltalite_tables as dlt
 
-    db = "delta_mart_par_" + run_scope(sf_dir)
-    key = (id(spark), sf_dir)
-    view = dlt.view_name(db, "customer_rollup")
-    if _PAR_CACHE.get(key) == db and spark.catalog.tableExists(view):
-        return db
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    shutil.rmtree(f"/tmp/spark_models_delta_mart/{db}", ignore_errors=True)
-    spark.sql(
-        f"CREATE DATABASE {db} LOCATION '/tmp/spark_models_delta_mart/{db}'"
+    def build(db: str) -> None:
+        project = Project.load(_EXAMPLE_PROJECT)
+        for cutoff in (_CUTOFF1, _CUTOFF2):
+            r = Runner(
+                spark=spark,
+                project=project,
+                database=db,
+                vars={"sf_dir": sf_dir, "cutoff_date": cutoff},
+            )
+            require_success(
+                r.run(threads=4), f"parallel delta run (cutoff={cutoff})"
+            )
+        require_success(r.test(), "parallel delta checks")
+
+    db, _ = gate_db(
+        spark, "delta_mart_par_", sf_dir, probe="customer_rollup", build=build
     )
-    project = Project.load(_EXAMPLE_PROJECT)
-    for cutoff in (_CUTOFF1, _CUTOFF2):
-        r = Runner(
-            spark=spark,
-            project=project,
-            database=db,
-            vars={"sf_dir": sf_dir, "cutoff_date": cutoff},
-        )
-        res = r.run(threads=4)
-        if any(x.status != "success" for x in res):
-            raise RuntimeError(f"parallel delta run (cutoff={cutoff}) failed: {res}")
-    checks = r.test()
-    if any(t.status != "success" for t in checks):
-        raise RuntimeError(f"parallel delta checks failed: {checks}")
-    _PAR_CACHE[key] = db
     return db
 
 

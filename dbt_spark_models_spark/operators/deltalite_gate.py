@@ -17,7 +17,6 @@ deterministic for a fixed sf_dir.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 

@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbt_spark_models_spark.operators import query, run_scope
+from dbt_spark_models_spark.operators import gate_db, query, require_success
 from dbt_spark_models_spark.sources.testdata import load_tables
 
 _EXAMPLE_PROJECT = os.path.join(
@@ -38,40 +38,17 @@ _STG_ORACLE = f"""
 """
 
 
-def _fresh_db(spark: SparkSession, db: str) -> None:
-    import shutil
-
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    # the in-memory catalog can't CASCADE tables created by a previous
-    # session, so clear the physical location too
-    shutil.rmtree(f"/tmp/spark_models_engine/{db}", ignore_errors=True)
-    spark.sql(f"CREATE DATABASE {db} LOCATION '/tmp/spark_models_engine/{db}'")
-
-
-# (session id, sf_dir) → db of an already-built SCD2 history (see
-# engine_scd2_snapshot docstring)
-_SCD2_CACHE: dict[tuple[int, str], str] = {}
-
-# (session id, sf_dir) → db of an already-built mini-mart. Several gate
-# queries verify different tables of the SAME project build; rebuilding it
-# per query doubled the driver's per-round grading cost for nothing.
-_MART_CACHE: dict[tuple[int, str], str] = {}
-
-
 def _shared_mini_mart(spark: SparkSession, sf_dir: str) -> str:
-    # The db name is derived from sf_dir so interleaved grading across
-    # scale factors (A, B, A) can never serve A's queries from a mart
-    # built on B's data: each sf_dir owns its own physical db, and the
-    # tableExists probe checks the right one.
-    import hashlib
-
-    db = "engine_gate_mart_" + run_scope(sf_dir)
-    key = (id(spark), sf_dir)
-    if _MART_CACHE.get(key) != db or not spark.catalog.tableExists(
-        f"{db}.daily_user_stats"
-    ):
-        _build_mini_mart(spark, sf_dir, db)
-        _MART_CACHE[key] = db
+    # Several gate queries verify different tables of the SAME project
+    # build; rebuilding it per query doubled the driver's per-round
+    # grading cost for nothing.
+    db, _ = gate_db(
+        spark,
+        "engine_gate_mart_",
+        sf_dir,
+        probe="daily_user_stats",
+        build=lambda db: _build_mini_mart(spark, sf_dir, db),
+    )
     return db
 
 
@@ -80,7 +57,6 @@ def _build_mini_mart(spark: SparkSession, sf_dir: str, db: str) -> None:
     cutoff — exercising first-run CTAS *and* the insert_overwrite path."""
     from dbt_spark_models_spark.plans import Project, Runner
 
-    _fresh_db(spark, db)
     project = Project.load(_EXAMPLE_PROJECT)
     r1 = Runner(
         spark=spark,
@@ -88,12 +64,8 @@ def _build_mini_mart(spark: SparkSession, sf_dir: str, db: str) -> None:
         database=db,
         vars={"sf_dir": sf_dir, "cutoff_date": "2024-01-10"},
     )
-    seed_results = r1.seed()
-    if any(r.status != "success" for r in seed_results):
-        raise RuntimeError(f"seed failed: {seed_results}")
-    run1 = r1.run()
-    if any(r.status != "success" for r in run1):
-        raise RuntimeError(f"first run failed: {run1}")
+    require_success(r1.seed(), "seed")
+    require_success(r1.run(), "first run")
     # day 2: incremental re-run with the standard lookback window
     r2 = Runner(
         spark=spark,
@@ -101,13 +73,8 @@ def _build_mini_mart(spark: SparkSession, sf_dir: str, db: str) -> None:
         database=db,
         vars={"sf_dir": sf_dir, "cutoff_date": "2024-01-15"},
     )
-    results = r2.run()
-    bad = [r for r in results if r.status not in ("success",)]
-    if bad:
-        raise RuntimeError(f"engine run failed: {bad}")
-    tests = r2.test()
-    if any(t.status != "success" for t in tests):
-        raise RuntimeError(f"engine tests failed: {tests}")
+    require_success(r2.run(), "engine run")
+    require_success(r2.test(), "engine tests")
 
 
 @query(
@@ -220,17 +187,21 @@ def engine_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_spark_models_spark.sources.testdata import register_views
 
     register_views(spark, sf_dir, ("orders",))
-    import hashlib
-
-    db = "engine_gate_merge_" + run_scope(sf_dir)
-    _fresh_db(spark, db)
     cfg = dict(
         materialized="incremental",
         incremental_strategy="merge",
         unique_key="o_custkey",
     )
-    materialize(spark, "cust_rollup", _MERGE_SRC, cfg, db, first_run_sql=_MERGE_B1)
-    materialize(spark, "cust_rollup", _MERGE_SRC, cfg, db)
+
+    def build(db: str) -> None:
+        materialize(
+            spark, "cust_rollup", _MERGE_SRC, cfg, db, first_run_sql=_MERGE_B1
+        )
+        materialize(spark, "cust_rollup", _MERGE_SRC, cfg, db)
+
+    db, _ = gate_db(
+        spark, "engine_gate_merge_", sf_dir, probe="cust_rollup", build=build
+    )
     return spark.table(f"{db}.cust_rollup").select(
         "o_custkey",
         "n_orders",
@@ -271,55 +242,46 @@ def engine_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstructs the full expected history — verifying close/open/delete
     transitions, not just current rows.
 
-    The built history is memoized per (session, sf_dir) — same pattern and
-    rationale as ``_shared_mini_mart``: the point-in-time gate reuses this
-    table, and the db name is derived from sf_dir so interleaved grading
-    across scale factors never serves stale data."""
-    import hashlib
-
+    The built history is memoized per session, like the mini-mart: the
+    point-in-time gate reuses this table."""
     from dbt_spark_models_spark.plans.snapshots import snapshot
 
-    db = "engine_gate_scd2_" + run_scope(sf_dir)
-    key = (id(spark), sf_dir)
-    if _SCD2_CACHE.get(key) == db and spark.catalog.tableExists(
-        f"{db}.dim_product"
-    ):
-        return spark.table(f"{db}.dim_product").select(
-            "product_id", "name", "price", "dbt_valid_from", "dbt_valid_to"
+    def build(db: str) -> None:
+        part = load_tables(spark, sf_dir, ("part",))["part"]
+        cfg = dict(
+            unique_key="product_id",
+            strategy="timestamp",
+            updated_at="update_ts",
+            invalidate_hard_deletes=True,
         )
-    _fresh_db(spark, db)
-    part = load_tables(spark, sf_dir, ("part",))["part"]
-    cfg = dict(
-        unique_key="product_id",
-        strategy="timestamp",
-        updated_at="update_ts",
-        invalidate_hard_deletes=True,
-    )
-    b1 = part.select(
-        F.col("p_partkey").alias("product_id"),
-        F.col("p_name").alias("name"),
-        F.round("p_retailprice", 2).alias("price"),
-        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("update_ts"),
-    )
-    snapshot(spark, "dim_product", b1, cfg, db)
-    b2 = (
-        b1.filter(F.col("product_id") % 97 != 3)
-        .withColumn(
-            "price",
-            F.when(
-                F.col("product_id") % 10 == 0, F.round(F.col("price") * 1.1, 2)
-            ).otherwise(F.col("price")),
+        b1 = part.select(
+            F.col("p_partkey").alias("product_id"),
+            F.col("p_name").alias("name"),
+            F.round("p_retailprice", 2).alias("price"),
+            F.lit("2024-01-01 00:00:00").cast("timestamp").alias("update_ts"),
         )
-        .withColumn(
-            "update_ts",
-            F.when(
-                F.col("product_id") % 10 == 0,
-                F.lit("2024-02-01 00:00:00").cast("timestamp"),
-            ).otherwise(F.col("update_ts")),
+        snapshot(spark, "dim_product", b1, cfg, db)
+        b2 = (
+            b1.filter(F.col("product_id") % 97 != 3)
+            .withColumn(
+                "price",
+                F.when(
+                    F.col("product_id") % 10 == 0, F.round(F.col("price") * 1.1, 2)
+                ).otherwise(F.col("price")),
+            )
+            .withColumn(
+                "update_ts",
+                F.when(
+                    F.col("product_id") % 10 == 0,
+                    F.lit("2024-02-01 00:00:00").cast("timestamp"),
+                ).otherwise(F.col("update_ts")),
+            )
         )
+        snapshot(spark, "dim_product", b2, cfg, db, run_ts="2024-02-02 00:00:00")
+
+    db, _ = gate_db(
+        spark, "engine_gate_scd2_", sf_dir, probe="dim_product", build=build
     )
-    snapshot(spark, "dim_product", b2, cfg, db, run_ts="2024-02-02 00:00:00")
-    _SCD2_CACHE[key] = db
     return spark.table(f"{db}.dim_product").select(
         "product_id", "name", "price", "dbt_valid_from", "dbt_valid_to"
     )
@@ -393,38 +355,42 @@ def engine_scd2_check_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
     including that name-only changes leave the original row open."""
     from dbt_spark_models_spark.plans.snapshots import snapshot
 
-    db = "engine_gate_scd2_check"
-    _fresh_db(spark, db)
-    sup = load_tables(spark, sf_dir, ("supplier",))["supplier"]
-    cfg = dict(
-        unique_key="supplier_id",
-        strategy="check",
-        check_cols=["acctbal"],
-        invalidate_hard_deletes=True,
-    )
-    b1 = sup.select(
-        F.col("s_suppkey").alias("supplier_id"),
-        F.col("s_name").alias("name"),
-        F.round("s_acctbal", 2).alias("acctbal"),
-    )
-    snapshot(spark, "dim_supplier", b1, cfg, db, run_ts="2024-01-01 00:00:00")
-    b2 = (
-        b1.filter(F.col("supplier_id") % 13 != 2)
-        .withColumn(
-            "acctbal",
-            F.when(
-                F.col("supplier_id") % 7 == 0,
-                F.round(F.col("acctbal") * 1.05, 2),
-            ).otherwise(F.col("acctbal")),
+    def build(db: str) -> None:
+        sup = load_tables(spark, sf_dir, ("supplier",))["supplier"]
+        cfg = dict(
+            unique_key="supplier_id",
+            strategy="check",
+            check_cols=["acctbal"],
+            invalidate_hard_deletes=True,
         )
-        .withColumn(
-            "name",
-            F.when(
-                F.col("supplier_id") % 11 == 0, F.concat(F.col("name"), F.lit(" RENAMED"))
-            ).otherwise(F.col("name")),
+        b1 = sup.select(
+            F.col("s_suppkey").alias("supplier_id"),
+            F.col("s_name").alias("name"),
+            F.round("s_acctbal", 2).alias("acctbal"),
         )
+        snapshot(spark, "dim_supplier", b1, cfg, db, run_ts="2024-01-01 00:00:00")
+        b2 = (
+            b1.filter(F.col("supplier_id") % 13 != 2)
+            .withColumn(
+                "acctbal",
+                F.when(
+                    F.col("supplier_id") % 7 == 0,
+                    F.round(F.col("acctbal") * 1.05, 2),
+                ).otherwise(F.col("acctbal")),
+            )
+            .withColumn(
+                "name",
+                F.when(
+                    F.col("supplier_id") % 11 == 0,
+                    F.concat(F.col("name"), F.lit(" RENAMED")),
+                ).otherwise(F.col("name")),
+            )
+        )
+        snapshot(spark, "dim_supplier", b2, cfg, db, run_ts="2024-02-01 00:00:00")
+
+    db, _ = gate_db(
+        spark, "engine_gate_scd2_check_", sf_dir, probe="dim_supplier", build=build
     )
-    snapshot(spark, "dim_supplier", b2, cfg, db, run_ts="2024-02-01 00:00:00")
     return spark.table(f"{db}.dim_supplier").select(
         "supplier_id", "name", "acctbal", "dbt_valid_from", "dbt_valid_to"
     )
@@ -479,28 +445,19 @@ def engine_curation_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_spark_models_spark.sources.testdata import register_views
 
     register_views(spark, sf_dir, ("documents",))
-    # same memoization (and same sf_dir-derived db name) as the mini-mart:
-    # repeat gradings of this query reuse the built project
-    import hashlib
 
-    db = "engine_gate_cur_" + run_scope(sf_dir)
-    key = (id(spark), sf_dir, "curation")
-    if _MART_CACHE.get(key) != db or not spark.catalog.tableExists(
-        f"{db}.corpus_report"
-    ):
-        _fresh_db(spark, db)
+    # memoized like the mini-mart: repeat gradings reuse the built project
+    def build(db: str) -> None:
         project = Project.load(_CURATION_PROJECT)
         runner = Runner(
             spark=spark, project=project, database=db, vars={"sf_dir": sf_dir}
         )
-        results = runner.run()
-        bad = [r for r in results if r.status != "success"]
-        if bad:
-            raise RuntimeError(f"curation run failed: {bad}")
-        tests = runner.test()
-        if any(t.status != "success" for t in tests):
-            raise RuntimeError(f"curation tests failed: {tests}")
-        _MART_CACHE[key] = db
+        require_success(runner.run(), "curation run")
+        require_success(runner.test(), "curation tests")
+
+    db, _ = gate_db(
+        spark, "engine_gate_cur_", sf_dir, probe="corpus_report", build=build
+    )
     return spark.table(f"{db}.corpus_report")
 
 
@@ -529,17 +486,11 @@ def engine_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     hint, and ``tests/test_plans_audit.py`` asserts the physical plan has
     a SortMergeJoin with NO shuffle exchange on either child.
 
-    The bucketed pair is memoized per (session, sf_dir) like the
-    mini-mart: the one-time bucketing cost is the amortized-write story.
+    The bucketed pair is memoized per session like the mini-mart: the
+    one-time bucketing cost is the amortized-write story.
     """
-    import hashlib
 
-    db = "engine_gate_bkt_" + run_scope(sf_dir)
-    key = (id(spark), sf_dir, "bucketed")
-    if _MART_CACHE.get(key) != db or not spark.catalog.tableExists(
-        f"{db}.orders_bkt"
-    ):
-        _fresh_db(spark, db)
+    def build(db: str) -> None:
         t = load_tables(spark, sf_dir, ("orders", "lineitem"))
         (
             t["orders"]
@@ -557,7 +508,10 @@ def engine_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("overwrite")
             .saveAsTable(f"{db}.lineitem_bkt")
         )
-        _MART_CACHE[key] = db
+
+    db, _ = gate_db(
+        spark, "engine_gate_bkt_", sf_dir, probe="orders_bkt", build=build
+    )
     o = spark.table(f"{db}.orders_bkt").filter(F.col("o_orderstatus") == "F")
     l = spark.table(f"{db}.lineitem_bkt")
     # MERGE hint: demonstrate the exchange-free sort-merge path (a broadcast
@@ -750,10 +704,6 @@ def engine_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# (session id, sf_dir) → db of a mini-mart that has been built AND erased
-_ERASE_CACHE: dict[tuple[int, str], str] = {}
-
-
 @query(
     "engine_user_erasure",
     oracle=f"""
@@ -782,26 +732,19 @@ def engine_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     build is the subject of ``engine_incremental_daily_stats``; this gate
     only needs a populated mart to sweep, and a single run halves its
     wall-time."""
-    import hashlib
-
     from dbt_spark_models_spark.plans import Project, Runner
     from dbt_spark_models_spark.sources.testdata import register_views
 
     register_views(spark, sf_dir, ("events",))
-    db = "engine_gate_erase_" + run_scope(sf_dir)
-    key = (id(spark), sf_dir)
-    if _ERASE_CACHE.get(key) != db or not spark.catalog.tableExists(
-        f"{db}.daily_user_stats"
-    ):
-        _fresh_db(spark, db)
-        build = Runner(
+
+    def build(db: str) -> None:
+        mart = Runner(
             spark=spark,
             project=Project.load(_EXAMPLE_PROJECT),
             database=db,
             vars={"sf_dir": sf_dir, "cutoff_date": "2024-01-15"},
         )
-        if any(r.status != "success" for r in (*build.seed(), *build.run())):
-            raise RuntimeError("erase-gate mart build failed")
+        require_success(mart.seed() + mart.run(), "erase-gate mart build")
         ev = load_tables(spark, sf_dir, ("events",))["events"]
         # the deletion queue stays a DataFrame end to end — no driver hop
         keys = (
@@ -813,11 +756,10 @@ def engine_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
             database=db,
             vars={"sf_dir": sf_dir, "cutoff_date": "2024-01-15"},
         )
-        results = runner.erase("user_id", keys)
-        bad = [r for r in results if r.status != "success"]
-        if bad:
-            raise RuntimeError(f"erasure failed: {bad}")
-        if not results:
+        if not require_success(runner.erase("user_id", keys), "erasure"):
             raise RuntimeError("erasure touched no tables")
-        _ERASE_CACHE[key] = db
+
+    db, _ = gate_db(
+        spark, "engine_gate_erase_", sf_dir, probe="daily_user_stats", build=build
+    )
     return spark.table(f"{db}.daily_user_stats")

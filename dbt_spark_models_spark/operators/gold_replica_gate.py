@@ -28,30 +28,17 @@ full-reload run amortizes staleness the lookback tolerates.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dbt_spark_models_spark.operators import query, run_scope
+from dbt_spark_models_spark.operators import gate_db, query, require_success
 
 _PROJECT_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     "examples",
     "gold_replica",
 )
-
-# (session id, sf_dir, schedule) → db with a finished two-run build
-_BUILD_CACHE: dict[tuple[int, str, str], str] = {}
-
-
-def _fresh_db(spark: SparkSession, db: str) -> None:
-    import shutil
-
-    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-    shutil.rmtree(f"/tmp/spark_models_engine/{db}", ignore_errors=True)
-    spark.sql(f"CREATE DATABASE {db} LOCATION '/tmp/spark_models_engine/{db}'")
-
 
 def _build(
     spark: SparkSession,
@@ -66,58 +53,57 @@ def _build(
     fire after each run with that run's timestamp.  Returns the db."""
     from dbt_spark_models_spark.plans import Project, Runner
 
-    schedule = f"{run1}|{run2}|{tag}"
-    db = "gold_replica_" + run_scope(sf_dir, schedule)
-    key = (id(spark), sf_dir, schedule)
-    if _BUILD_CACHE.get(key) == db and spark.catalog.tableExists(
-        f"{db}.gold__active_users_with_ephemeral"
-    ):
-        return db
-
-    _fresh_db(spark, db)
-    project = Project.load(_PROJECT_DIR)
-    r1 = Runner(
-        spark=spark,
-        project=project,
-        database=db,
-        target_name="dev",
-        vars={"sf_dir": sf_dir, "run_date": run1},
-    )
-    results = r1.seed() + r1.run() + r1.snapshot(run_ts=f"{run1} 00:00:00")
-    bad = [r for r in results if r.status != "success"]
-    if bad:
-        raise RuntimeError(f"gold_replica run1 failed: {bad}")
-
-    r2 = Runner(
-        spark=spark,
-        project=project,
-        database=db,
-        target_name="dev",
-        vars={"sf_dir": sf_dir, "run_date": run2},
-    )
-    run2_results = r2.run()
-    results = run2_results + r2.snapshot(run_ts=f"{run2} 00:00:00") + r2.test()
-    bad = [r for r in results if r.status not in ("success",)]
-    if bad:
-        raise RuntimeError(f"gold_replica run2 failed: {bad}")
-    gold_actions = {
-        r.node: r.action
-        for r in run2_results
-        if r.node.startswith("gold_active_") or r.node == "active_users"
-    }
-    if expect_full_reload:
-        # full_reload_on weekday: the incremental models must have taken
-        # the full-rebuild branch (CTAS), not insert_overwrite
-        wrong = {n: a for n, a in gold_actions.items() if a != "created"}
-        if wrong:
-            raise RuntimeError(f"expected weekly full reload, got {wrong}")
-    else:
-        wrong = {
-            n: a for n, a in gold_actions.items() if a != "overwritten_partitions"
+    def build(db: str) -> None:
+        project = Project.load(_PROJECT_DIR)
+        r1 = Runner(
+            spark=spark,
+            project=project,
+            database=db,
+            target_name="dev",
+            vars={"sf_dir": sf_dir, "run_date": run1},
+        )
+        require_success(
+            r1.seed() + r1.run() + r1.snapshot(run_ts=f"{run1} 00:00:00"),
+            "gold_replica run1",
+        )
+        r2 = Runner(
+            spark=spark,
+            project=project,
+            database=db,
+            target_name="dev",
+            vars={"sf_dir": sf_dir, "run_date": run2},
+        )
+        run2_results = r2.run()
+        require_success(
+            run2_results + r2.snapshot(run_ts=f"{run2} 00:00:00") + r2.test(),
+            "gold_replica run2",
+        )
+        gold_actions = {
+            r.node: r.action
+            for r in run2_results
+            if r.node.startswith("gold_active_") or r.node == "active_users"
         }
-        if wrong:
-            raise RuntimeError(f"expected incremental overwrite, got {wrong}")
-    _BUILD_CACHE[key] = db
+        if expect_full_reload:
+            # full_reload_on weekday: the incremental models must have taken
+            # the full-rebuild branch (CTAS), not insert_overwrite
+            wrong = {n: a for n, a in gold_actions.items() if a != "created"}
+            if wrong:
+                raise RuntimeError(f"expected weekly full reload, got {wrong}")
+        else:
+            wrong = {
+                n: a for n, a in gold_actions.items() if a != "overwritten_partitions"
+            }
+            if wrong:
+                raise RuntimeError(f"expected incremental overwrite, got {wrong}")
+
+    db, _ = gate_db(
+        spark,
+        "gold_replica_",
+        sf_dir,
+        f"{run1}|{run2}|{tag}",
+        probe="gold__active_users_with_ephemeral",
+        build=build,
+    )
     return db
 
 

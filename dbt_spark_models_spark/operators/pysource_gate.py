@@ -4,8 +4,6 @@ budget stays on the never-graded front of the registry."""
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -1819,7 +1819,6 @@ def eval_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _layout_dir(sf_dir: str, gate: str) -> str:
-    import hashlib
     import shutil
 
     h = run_scope(sf_dir)

@@ -5,7 +5,9 @@ the measurement matches what the driver records."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import subprocess
 import sys
 
@@ -74,3 +76,28 @@ def test_suite_never_touches_committed_bench_detail():
     assert 'json.dump' in src and '"BENCH_DETAIL.run.json"' in src
     with open(os.path.join(REPO, ".gitignore")) as f:
         assert "BENCH_DETAIL.run.json" in f.read()
+
+
+def test_r02_rebase_is_keyed_on_content_not_file_name(tmp_path):
+    """HONEST_REBASED corrects the committed r02 artifact only: a renamed
+    byte-identical copy is still rebased, and an edited file that kept
+    the name BENCH_r02.json is taken at face value."""
+    sys.path.insert(0, REPO)
+    from tools.benchgate import HONEST_REBASED, load_baseline
+
+    r02 = os.path.join(REPO, "BENCH_r02.json")
+    renamed = tmp_path / "baseline.json"
+    shutil.copyfile(r02, renamed)
+    qs = load_baseline(str(renamed))["queries"]
+    assert {k: qs[k] for k in HONEST_REBASED} == HONEST_REBASED
+
+    with open(r02) as f:
+        doc = json.load(f)
+    raw = doc["parsed"]["queries"]
+    raw["q1_pricing_summary"] += 1.0
+    (tmp_path / "edited").mkdir()
+    edited = tmp_path / "edited" / "BENCH_r02.json"
+    edited.write_text(json.dumps(doc))
+    qs = load_baseline(str(edited))["queries"]
+    for k, rebased in HONEST_REBASED.items():
+        assert qs[k] == raw[k] != rebased
