@@ -1532,7 +1532,6 @@ def sink_deltalite_protocol_features(spark: SparkSession, sf_dir: str) -> DataFr
         spark,
         path,
         [("o_orderkey", "<=", 64)],
-        change_feed=True,
         deletion_vectors=True,
     )
     snap_proto(4, "dv_delete")

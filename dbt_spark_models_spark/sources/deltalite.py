@@ -58,7 +58,7 @@ import threading
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -234,7 +234,7 @@ def _features_from_meta(meta: dict | None) -> set[str]:
     if not meta:
         return feats
     conf = meta.get("configuration") or {}
-    if str(conf.get("delta.appendOnly", "")).lower() == "true":
+    if _is_append_only(meta):
         feats.add("appendOnly")
     if str(conf.get("delta.enableChangeDataFeed", "")).lower() == "true":
         feats.add("changeDataFeed")
@@ -259,17 +259,12 @@ def _features_from_meta(meta: dict | None) -> set[str]:
 
 
 def _protocol_action(
-    meta: dict | None,
-    dv: bool = False,
-    prior: dict | None = None,
-    table_path: str | None = None,
+    meta: dict | None, dv: bool = False, prior: dict | None = None
 ) -> dict:
     """The ``protocol`` action for a commit: the versions + feature lists
     the table's enabled features REQUIRE, ratcheted against the current
-    protocol (``prior``, or replayed from ``table_path``) so a commit can
-    upgrade the protocol mid-history but never downgrade it."""
-    if prior is None and table_path is not None:
-        prior = _current_protocol(table_path)
+    protocol ``prior`` so a commit can upgrade the protocol mid-history
+    but never downgrade it."""
     feats = _features_from_meta(meta)
     if dv:
         feats.add("deletionVectors")
@@ -771,6 +766,79 @@ def _commit(
             pass  # losing one costs replay time, never correctness
 
 
+class _Txn:
+    """One optimistic transaction (the spec's commit model): the snapshot
+    a writer read, and the only way to commit on top of it."""
+
+    def __init__(self, table_path: str, version: int, state: dict):
+        self.table_path = table_path
+        self.version = version  # -1: no log yet
+        self.state = state
+
+    @property
+    def active(self) -> dict:
+        return self.state["active"]
+
+    @property
+    def meta(self) -> dict:
+        return self.state["meta"]
+
+    def commit(
+        self,
+        op: str,
+        meta: dict,
+        actions: list[dict],
+        dv: bool = False,
+        txn: dict[str, int] | None = None,
+    ) -> int:
+        """Commit ``actions`` at snapshot + 1 behind the header every
+        commit carries: commitInfo, the protocol ``meta`` (and ``dv``)
+        requires ratcheted against the snapshot's, the metaData, and the
+        SetTransaction watermarks ``txn`` ({appId: version}) that ride
+        the same commit as the data. A commit that landed since the
+        snapshot makes this raise ConcurrentWriteError instead of being
+        clobbered. Returns the committed version."""
+        version = self.version + 1
+        _commit(
+            self.table_path,
+            version,
+            [
+                {"commitInfo": {"operation": op, "timestamp": int(time.time() * 1000)}},
+                _protocol_action(meta, dv=dv, prior=self.state.get("protocol")),
+                {"metaData": meta},
+                *(
+                    {"txn": {"appId": k, "version": int(v)}}
+                    for k, v in sorted((txn or {}).items())
+                ),
+                *actions,
+            ],
+        )
+        return version
+
+
+def _begin(table_path: str, create: bool = False) -> _Txn:
+    """Start a transaction: list the log once, replay exactly its newest
+    version and refuse a protocol this writer does not implement. A
+    table with no log is an empty snapshot at version -1 for writers
+    that may ``create`` it, and FileNotFoundError for the rest."""
+    versions = _list_versions(table_path)
+    if not versions:
+        if not create:
+            raise FileNotFoundError(f"no DeltaLite table at {table_path}")
+        return _Txn(table_path, -1, {"active": {}, "meta": {}, "txns": {}})
+    state = _replay_state(table_path, versions[-1])
+    _assert_writable(state.get("protocol"), table_path)
+    return _Txn(table_path, versions[-1], state)
+
+
+def _removes(paths, data_change: bool = True) -> list[dict]:
+    now_ms = int(time.time() * 1000)
+    return [
+        {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": data_change}}
+        for p in paths
+    ]
+
+
 _PHYS_KEY = "delta.columnMapping.physicalName"
 
 
@@ -853,11 +921,8 @@ def rename_column(table_path: str, old: str, new: str) -> int:
     rewriting every file of the table (what plain parquet tables must
     do). Renaming a partition column is out of this subset (the physical
     directory layout carries its name)."""
-    state = _replay_state(table_path)
-    _assert_writable(state.get("protocol"), table_path)
-    meta = state["meta"]
-    if not meta:
-        raise FileNotFoundError(f"no DeltaLite table at {table_path}")
+    tx = _begin(table_path)
+    meta = tx.meta
     if old in meta.get("partitionColumns", []):
         raise ValueError(f"cannot rename partition column {old!r}")
     _check_column_not_referenced(meta, old, "rename")
@@ -880,22 +945,7 @@ def rename_column(table_path: str, old: str, new: str) -> int:
             "delta.columnMapping.mode": "name",
         },
     )
-    version = _list_versions(table_path)[-1] + 1
-    _commit(
-        table_path,
-        version,
-        [
-            {
-                "commitInfo": {
-                    "operation": "RENAME COLUMN",
-                    "timestamp": int(time.time() * 1000),
-                }
-            },
-            _protocol_action(meta, prior=state.get("protocol")),
-            {"metaData": meta},
-        ],
-    )
-    return version
+    return tx.commit("RENAME COLUMN", meta, [])
 
 
 def _evolved_schema(meta: dict, df: DataFrame) -> StructType:
@@ -926,17 +976,15 @@ def _evolved_schema(meta: dict, df: DataFrame) -> StructType:
     return StructType(existing.fields + new)
 
 
-def _meta_action(
+def _new_meta(
     df: DataFrame, table_id: str, partition_by: list[str] | None = None
 ) -> dict:
     return {
-        "metaData": {
-            "id": table_id,
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": df.schema.json(),
-            "partitionColumns": list(partition_by or []),
-            "configuration": {},
-        }
+        "id": table_id,
+        "format": {"provider": "parquet", "options": {}},
+        "schemaString": df.schema.json(),
+        "partitionColumns": list(partition_by or []),
+        "configuration": {},
     }
 
 
@@ -957,14 +1005,15 @@ def _generated_exprs(meta: dict) -> dict[str, str]:
     return out
 
 
-def _apply_generated(df: DataFrame, meta: dict, what: str) -> DataFrame:
-    """Enforce the spec's generated-column writer contract on a batch:
-    a column the batch OMITS is computed from its expression; a column
-    the batch provides must EQUAL the expression on every row (a writer
-    that cannot guarantee the invariant must refuse to write) — same
-    posture as CHECK constraints, with NULL-safe comparison so a NULL
-    provided against a non-NULL expression is a violation."""
-    for name, expr in _generated_exprs(meta).items():
+def _apply_generated(df: DataFrame, exprs: dict[str, str], what: str) -> DataFrame:
+    """Enforce the spec's generated-column writer contract on a batch
+    for ``exprs`` ({column: SQL expression}): a column the batch OMITS
+    is computed from its expression; a column the batch provides must
+    EQUAL the expression on every row (a writer that cannot guarantee
+    the invariant must refuse to write) — same posture as CHECK
+    constraints, with NULL-safe comparison so a NULL provided against a
+    non-NULL expression is a violation."""
+    for name, expr in exprs.items():
         if name not in df.columns:
             df = df.withColumn(name, F.expr(expr))
             continue
@@ -1023,29 +1072,20 @@ def write(
     ``file_format='delta'`` ×197): at 100 TB a daily increment replaces
     one day's files in one atomic commit instead of rewriting the table.
     On a table with no versions yet it degrades to a plain create."""
+    if mode not in ("overwrite", "append", "overwrite_partitions"):
+        raise ValueError(f"unknown mode {mode!r}")
     os.makedirs(table_path, exist_ok=True)
-    versions = _list_versions(table_path)
+    tx = _begin(table_path, create=True)
+    exists = tx.version >= 0
+    meta, prior_active = tx.meta, tx.active
     dynamic = mode == "overwrite_partitions"
     if dynamic:
-        if not versions:
+        if not exists:
             mode, dynamic = "overwrite", False
         else:
             # validation, schema evolution, and file writes are exactly
             # the append path; only the commit's remove set differs
             mode = "append"
-    if not versions:
-        version = 0
-        prior: list[str] = []
-        prior_active: dict = {}
-        meta: dict = {}
-        _w_proto: dict | None = None
-    else:
-        version = versions[-1] + 1
-        _w_state = _replay_state(table_path)
-        _assert_writable(_w_state.get("protocol"), table_path)
-        prior, meta = sorted(_w_state["active"]), _w_state["meta"]
-        prior_active = _w_state["active"]
-        _w_proto = _w_state.get("protocol")
     if dynamic:
         if not meta.get("partitionColumns"):
             raise ValueError(
@@ -1054,25 +1094,15 @@ def write(
             )
         _check_append_only(meta, "dynamic partition overwrite")
     if generated:
-        if versions and mode != "overwrite":
+        if exists and mode != "overwrite":
             raise ValueError(
                 "generated columns are declared at CREATE or a "
                 "schema-resetting OVERWRITE; appends inherit them from "
                 "the committed schema"
             )
-        for name, expr in generated.items():
-            if name not in df.columns:
-                df = df.withColumn(name, F.expr(expr))
-            else:
-                bad = df.filter(
-                    ~F.col(name).eqNullSafe(F.expr(expr))
-                ).limit(1)
-                if not bad.isEmpty():
-                    raise ValueError(
-                        f"batch violates generated column {name!r} = {expr!r}"
-                    )
+        df = _apply_generated(df, generated, "batch")
     existing_parts = meta.get("partitionColumns", [])
-    if mode == "append" and versions:
+    if mode == "append" and exists:
         if partition_by is None:
             partition_by = list(existing_parts)
         elif list(partition_by) != list(existing_parts):
@@ -1080,11 +1110,11 @@ def write(
                 f"append partitioning {partition_by} != table's {existing_parts}"
             )
     mapping = _column_mapping(meta)
-    if mode == "append" and versions:
+    if mode == "append" and exists:
         # generated columns first (an omitted column is computed, a
         # provided one validated), so constraints and schema validation
         # see the complete batch
-        df = _apply_generated(df, meta, "append batch")
+        df = _apply_generated(df, _generated_exprs(meta), "append batch")
         _enforce_constraints(df, meta, "append batch")
     if mapping and mode == "append":
         # column-mapped table: new files carry PHYSICAL names. Additive
@@ -1107,46 +1137,38 @@ def write(
             fj["metadata"] = {**(fj.get("metadata") or {}), _PHYS_KEY: phys}
             sch["fields"].append(fj)
         adds = _write_data_files(_to_physical(df, mapping), table_path, partition_by)
-        meta_action: dict = {
-            "metaData": dict(
-                meta, schemaString=json.dumps(sch, separators=(",", ":"))
-            )
-        }
-    elif mode == "append" and versions:
+        new_meta = dict(meta, schemaString=json.dumps(sch, separators=(",", ":")))
+    elif mode == "append" and exists:
         # validate BEFORE writing: existing columns keep their committed
         # type, partitioning is preserved, new columns widen the schema
         evolved = _evolved_schema(meta, df)
         adds = _write_data_files(df, table_path, partition_by)
-        meta_action = {
-            "metaData": dict(
-                meta,
-                schemaString=evolved.json(),
-                partitionColumns=list(partition_by or []),
-            )
-        }
+        new_meta = dict(
+            meta,
+            schemaString=evolved.json(),
+            partitionColumns=list(partition_by or []),
+        )
     else:
         # INSERT OVERWRITE replaces data, not table POLICY: CHECK
         # constraints (delta.constraints.*) survive the overwrite and the
         # new batch must satisfy them before it may commit (spec: a writer
         # that cannot enforce checkConstraints must refuse to write)
-        if versions:
+        if exists:
             _check_append_only(meta, "INSERT OVERWRITE")
             _enforce_constraints(df, meta, "overwrite batch")
         adds = _write_data_files(df, table_path, partition_by)
-        meta_action = _meta_action(df, meta.get("id", uuid.uuid4().hex), partition_by)
+        new_meta = _new_meta(df, meta.get("id", uuid.uuid4().hex), partition_by)
         if generated:
             # record the generation expressions in the field metadata
             # (spec delta.generationExpression) so appends enforce them
-            sch = json.loads(meta_action["metaData"]["schemaString"])
+            sch = json.loads(new_meta["schemaString"])
             for f in sch["fields"]:
                 if f["name"] in generated:
                     f["metadata"] = {
                         **(f.get("metadata") or {}),
                         _GEN_KEY: generated[f["name"]],
                     }
-            meta_action["metaData"]["schemaString"] = json.dumps(
-                sch, separators=(",", ":")
-            )
+            new_meta["schemaString"] = json.dumps(sch, separators=(",", ":"))
         # INSERT OVERWRITE replaces data, not table CONFIGURATION: the full
         # prior configuration (CHECK constraints, delta.appendOnly, any
         # delta.* / user property) is carried into the new metaData, as
@@ -1155,53 +1177,30 @@ def write(
         # schemaString with no physicalName metadata, so keeping
         # columnMapping.mode would claim a mapping the schema no longer
         # records (r6 ADVICE #1).
-        carried = {
+        new_meta["configuration"] = {
             k: v
             for k, v in (meta.get("configuration") or {}).items()
             if not k.startswith("delta.columnMapping.")
         }
-        if carried:
-            meta_action["metaData"]["configuration"] = carried
-    op_name = "OVERWRITE_PARTITIONS" if dynamic else mode.upper()
-    actions: list[dict] = [
-        {"commitInfo": {"operation": op_name, "timestamp": int(time.time() * 1000)}},
-        _protocol_action(meta_action["metaData"], prior=_w_proto),
-        meta_action,
-        *(
-            {"txn": {"appId": k, "version": int(v)}}
-            for k, v in sorted((txn or {}).items())
-        ),
-    ]
+    removed: list[str] = []
     if mode == "overwrite":
-        now_ms = int(time.time() * 1000)
-        actions += [
-            {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
-            for p in prior
-        ]
+        removed = sorted(prior_active)
     elif dynamic:
         # remove exactly the active files whose partition tuple the batch
         # replaces — a log-level set match on partitionValues, no file I/O
         pcols_dyn = meta.get("partitionColumns", [])
-        replaced = {
-            tuple((a.get("partitionValues") or {}).get(c) for c in pcols_dyn)
-            for a in adds
-        }
-        now_ms = int(time.time() * 1000)
-        actions += [
-            {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
-            for p in prior
-            if tuple(
-                (prior_active[p].get("partitionValues") or {}).get(c)
-                for c in pcols_dyn
-            )
-            in replaced
-        ]
-    elif mode != "append":
-        raise ValueError(f"unknown mode {mode!r}")
-    actions += [{"add": a} for a in adds]
-    _commit(table_path, version, actions)
-    return version
 
+        def ptuple(add: dict) -> tuple:
+            return tuple((add.get("partitionValues") or {}).get(c) for c in pcols_dyn)
+
+        replaced = {ptuple(a) for a in adds}
+        removed = [p for p in sorted(prior_active) if ptuple(prior_active[p]) in replaced]
+    return tx.commit(
+        "OVERWRITE_PARTITIONS" if dynamic else mode.upper(),
+        new_meta,
+        _removes(removed) + [{"add": a} for a in adds],
+        txn=txn,
+    )
 
 def _coerce_like(value: str | None, lit):
     """Coerce a partitionValues string to the filter literal's type; None
@@ -1347,15 +1346,17 @@ def read(
         version = version_at_timestamp(table_path, timestamp)
     state = _replay_state(table_path, version)
     _assert_readable(state.get("protocol"), table_path)
-    active = state["active"]
-    meta = state["meta"]
-    skip_filters = _translate_filters(skip_filters, _column_mapping(meta))
-    kept = {
-        p: active[p]
-        for p in sorted(active)
-        if not _maybe_skip(active[p], skip_filters)
+    return _scan_active(spark, table_path, state["meta"], _prune(state, skip_filters))
+
+
+def _prune(state: dict, skip_filters) -> dict:
+    """The snapshot's active files ({path: add}, in path order) that the
+    partition values and stats cannot rule out for ``skip_filters``
+    (logical column names)."""
+    skip = _translate_filters(skip_filters, _column_mapping(state["meta"]))
+    return {
+        p: a for p, a in sorted(state["active"].items()) if not _maybe_skip(a, skip)
     }
-    return _scan_active(spark, table_path, meta, kept)
 
 
 # reserved row-address columns used by the deletion-vector machinery
@@ -1508,12 +1509,7 @@ def scan_file_counts(
     """(files after skipping, total active files) — the pruning evidence
     the data-skipping gate publishes."""
     state = _replay_state(table_path, version)
-    active = state["active"]
-    skip_filters = _translate_filters(skip_filters, _column_mapping(state["meta"]))
-    kept = sum(
-        1 for p in active if not _maybe_skip(active[p], skip_filters)
-    )
-    return kept, len(active)
+    return len(_prune(state, skip_filters)), len(state["active"])
 
 
 def merge(
@@ -1521,7 +1517,6 @@ def merge(
     source: DataFrame,
     table_path: str,
     keys: list[str],
-    change_feed: bool = True,
     deletion_vectors: bool = False,
     txn: dict[str, int] | None = None,
 ) -> int:
@@ -1536,20 +1531,18 @@ def merge(
     ONE fused probe aggregates the source (conformed to the committed
     schema) by key: its largest rows-per-key count rejects duplicate-key
     sources like delta's MERGE — keys that collide only once cast
-    included — and its per-key min/max prunes the rewrite set by stats;
-    a matched-file probe then keeps exactly the files holding a matched
-    key (at 100 TB a merge aligned with the table's clustering touches
-    the handful of files holding the upserted keys, not the table).
-
-    ONE left join against the source keys tags the candidate target rows
-    (broadcastable, so the target is not shuffled and a rewritten file's
-    survivors stay together): rewritten files get the unmatched rows plus
-    the whole source. The change feed is the matched rows
-    (update_preimage) in a tagged union with the source, windowed by key
-    to split update_postimage from insert — a shuffle of source-sized
-    data only. Nothing is cached. The snapshot version is captured ONCE
-    and the commit lands at snapshot+1, so a concurrent commit makes the
-    O_EXCL create raise ConcurrentWriteError instead of being clobbered.
+    included — and its per-key min/max prunes the candidate files by
+    stats. The matched-row tag is ONE left join of the candidate rows
+    against the source keys (broadcastable, so the target is not
+    shuffled and a rewritten file's survivors stay together); the
+    shared rewrite (``_rewrite_matched``) keeps exactly the files
+    holding a matched key (at 100 TB a merge aligned with the table's
+    clustering touches the handful of files holding the upserted keys,
+    not the table) and adds the whole source. The change feed is the
+    matched rows (update_preimage) in a tagged union with the source,
+    windowed by key to split update_postimage from insert — a shuffle of
+    source-sized data only (spec CDC: update rows appear twice, pure
+    inserts once; the files carry PHYSICAL names, rename-stable).
 
     ``deletion_vectors=True`` makes the merge MERGE-ON-READ: matched
     pre-image rows are tombstoned in place (no candidate file is
@@ -1558,27 +1551,13 @@ def merge(
     append. Upsert cost becomes ∝ |source| + |matched rows|, not
     ∝ bytes of every file holding a matched key — the shape that keeps
     continuous upserts affordable on a 100 TB table; OPTIMIZE purges
-    the tombstones on its own schedule."""
-    if deletion_vectors and not change_feed:
-        raise ValueError("deletion_vectors=True requires change_feed=True")
-    versions = _list_versions(table_path)
-    snap_version = versions[-1]
-    state = _replay_state(table_path, snap_version)
-    _assert_writable(state.get("protocol"), table_path)
-    active, meta = state["active"], state["meta"]
-    # delta.appendOnly is checked at COMMIT level, not operation level
-    # (r6 ADVICE #2): an insert-only merge commits no dataChange removes
-    # and no DV repoints, so it is legal on an append-only table — only a
-    # merge that actually matches (and therefore removes or tombstones)
-    # rows is forbidden. The decision is made below, once the matched-key
-    # probe has run.
-    append_only = (
-        str((meta.get("configuration") or {}).get("delta.appendOnly", "")).lower()
-        == "true"
-    )
+    the tombstones on its own schedule.
+
+    ``txn`` ({appId: version}) records SetTransaction watermarks in the
+    merge's own commit (same contract as ``write(txn=...)``)."""
+    tx = _begin(table_path)
+    meta = tx.meta
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = meta.get("partitionColumns") or None
-    mapping = _column_mapping(meta)
     out_cols = [f.name for f in schema.fields]
     # conform the source to the COMMITTED schema (column order and types):
     # the metaData is preserved, so the written files must match it — a
@@ -1586,7 +1565,7 @@ def merge(
     # would otherwise write files the committed schema can't read.
     # Generated columns first: a source that omits one gets it computed,
     # a source that provides one is validated (writer invariant).
-    source = _apply_generated(source, meta, "merge source")
+    source = _apply_generated(source, _generated_exprs(meta), "merge source")
     source = source.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )
@@ -1605,131 +1584,61 @@ def merge(
     if (probe["__dl_dup"] or 0) > 1:
         raise ValueError("merge source has duplicate unique_key rows")
     empty = probe["__dl_dup"] is None
-    rewrite: list[str] = []
+    candidates: dict = {}
     # a key column that is NULL on every source row matches nothing
     if not empty and all(probe[f"mn_{k}"] is not None for k in keys):
         # a file can hold a matched key only if, for EVERY key column,
         # its [min,max] intersects the source's [min,max]
-        overlap = _translate_filters(
+        candidates = _prune(
+            tx.state,
             [
                 f
                 for k in keys
                 for f in ((k, "<=", probe[f"mx_{k}"]), (k, ">=", probe[f"mn_{k}"]))
             ],
-            mapping,
         )
-        rewrite = [p for p in sorted(active) if not _maybe_skip(active[p], overlap)]
-    if rewrite and (append_only or not deletion_vectors):
-        # matched-FILE probe (key columns only — column pruning makes it
-        # far cheaper than the rewrite): the probe's matched-key set is
-        # reused to prune the rewrite list to exactly the files that hold
-        # a matched key (r7 ADVICE #2) — a stats-grazed candidate whose
-        # keys never match keeps its bytes untouched, and zero matched
-        # files collapses the merge to insert-only (same gate the DV path
-        # gets from its `touched` counter). For append-only tables the
-        # probe also DECIDES legality: matches mean the commit would
-        # remove/tombstone rows.
-        key_scan = _scan_active(
-            spark,
-            table_path,
-            meta,
-            {p: active[p] for p in rewrite},
-            with_row_address=True,
-        ).select(_DV_FILE_COL, *keys)
-        matched_names = {
-            r[0]
-            for r in key_scan.join(source.select(*keys), on=keys, how="left_semi")
-            .select(_DV_FILE_COL)
-            .distinct()
-            .collect()  # ≤ |candidate files| rows — file names, not data
-        }
-        if matched_names and append_only:
-            raise ValueError(
-                "MERGE matched existing rows: commit would remove or "
-                "tombstone data, forbidden on a delta.appendOnly table "
-                "(insert-only merges are allowed)"
+    src_keys = source.select(*keys, F.lit(True).alias(_MATCHED_COL))
+
+    def tag(df: DataFrame) -> DataFrame:
+        return df.join(src_keys, keys, "left").withColumn(
+            _MATCHED_COL, F.col(_MATCHED_COL).isNotNull()
+        )
+
+    def rows(pre: DataFrame | None):
+        if empty:  # an empty source merges nothing
+            return None, None
+        if pre is None:  # no candidate holds a source key: insert-only
+            return source, source.withColumn(CHANGE_TYPE_COL, F.lit("insert"))
+        is_pre = F.col("__dl_side") == 0
+        has_tgt = F.max(is_pre).over(Window.partitionBy(*keys))
+        changes = (
+            pre.withColumn("__dl_side", F.lit(0))
+            .unionByName(source.withColumn("__dl_side", F.lit(1)))
+            .select(
+                *out_cols,
+                F.when(is_pre, "update_preimage")
+                .when(has_tgt, "update_postimage")
+                .otherwise("insert")
+                .alias(CHANGE_TYPE_COL),
             )
-        # __dl_file is the parquet file NAME — unique per table (the same
-        # invariant the deletion-vector tombstone join relies on)
-        rewrite = [p for p in rewrite if os.path.basename(p) in matched_names]
-    now_ms = int(time.time() * 1000)
-    adds: list[dict] = []
-    cdc_adds: list[dict] = []
-    dv_mode = deletion_vectors and bool(rewrite)
-    removes = [
-        {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
-        for p in ([] if dv_mode else rewrite)
-    ]
-    re_adds: list[dict] = []
-    if not empty:  # an empty source merges nothing
-        result = source
-        changes = source.withColumn(CHANGE_TYPE_COL, F.lit("insert"))
-        if rewrite:
-            candidates = {p: active[p] for p in rewrite}
-            # candidate rows LEFT JOIN the unique (duplicate-checked) source
-            # keys — broadcastable, so a rewritten file's survivors stay
-            # together, unshuffled; a NULL key never matches
-            target = _scan_active(
-                spark, table_path, meta, candidates, with_row_address=dv_mode
-            ).join(
-                source.select(*keys, F.lit(True).alias("__dl_has_src")), keys, "left"
-            )
-            matched = target.filter(F.col("__dl_has_src").isNotNull())
-            # change rows: the matched pre-images and the source, tagged
-            # and windowed by key — both sides are source-sized
-            pre = F.col("__dl_side") == 0
-            has_tgt = F.max(pre).over(Window.partitionBy(*keys))
-            changes = (
-                matched.select(*out_cols, F.lit(0).alias("__dl_side"))
-                .unionByName(source.withColumn("__dl_side", F.lit(1)))
-                .select(
-                    *out_cols,
-                    F.when(pre, "update_preimage")
-                    .when(has_tgt, "update_postimage")
-                    .otherwise("insert")
-                    .alias(CHANGE_TYPE_COL),
-                )
-            )
-            if dv_mode:
-                # matched pre-images are tombstoned in place; the whole
-                # source (updates + inserts) lands as one new append
-                dv_name, dv_counts = _write_tombstones(
-                    spark, table_path, candidates, matched
-                )
-                removes, re_adds, touched = _dv_repoint_actions(
-                    candidates, dv_name, dv_counts, now_ms
-                )
-                if not touched:  # stats grazed, no key matched: insert-only
-                    _remove_sidecar(table_path, dv_name)
-            else:
-                unmatched = target.filter(F.col("__dl_has_src").isNull())
-                result = unmatched.select(*out_cols).unionByName(source)
-        adds = _write_data_files(_to_physical(result, mapping), table_path, pcols)
-        if change_feed:
-            # spec CDC: update rows appear twice (pre- and post-image),
-            # pure inserts once (real delta gates this on
-            # delta.enableChangeDataFeed — pass change_feed=False to skip).
-            # CDC files carry PHYSICAL names (rename-stable)
-            cdc_adds = _write_data_files(
-                _to_physical(changes, mapping), table_path, change_data=True
-            )
-    actions: list[dict] = [
-        {"commitInfo": {"operation": "MERGE", "timestamp": now_ms}},
-        _protocol_action(meta, dv=dv_mode, prior=state.get("protocol")),
-        {"metaData": meta},
-        # SetTransaction watermarks ride the data commit (same contract
-        # as write(txn=...): exactly-once consumed-version bookkeeping)
-        *(
-            {"txn": {"appId": k, "version": int(v)}}
-            for k, v in sorted((txn or {}).items())
-        ),
-        *removes,
-        *re_adds,
-        *({"add": a} for a in adds),
-        *({"cdc": c} for c in cdc_adds),
-    ]
-    _commit(table_path, snap_version + 1, actions)
-    return snap_version + 1
+        )
+        return source, changes
+
+    # delta.appendOnly is checked at COMMIT level, not operation level
+    # (r6 ADVICE #2): an insert-only merge is legal on an append-only
+    # table; the shared rewrite refuses one that matches a row
+    version, _ = _rewrite_matched(
+        spark,
+        tx,
+        "MERGE",
+        candidates,
+        tag,
+        rows,
+        deletion_vectors,
+        commit_unmatched=True,
+        txn=txn,
+    )
+    return version
 
 
 def txn_append(
@@ -1751,15 +1660,12 @@ def txn_append(
     raising ConcurrentWriteError — the caller (foreachBatch) retries,
     re-reads, and then no-ops via the token."""
     os.makedirs(table_path, exist_ok=True)
-    versions = _list_versions(table_path)
+    tx = _begin(table_path, create=True)
     pcols: list[str] | None = None
-    if versions:
-        state = _replay_state(table_path)
-        _assert_writable(state.get("protocol"), table_path)
-        if state["txns"].get(app_id, -1) >= txn_version:
+    if tx.version >= 0:
+        if tx.state["txns"].get(app_id, -1) >= txn_version:
             return None  # retry of an already-committed micro-batch
-        version = versions[-1] + 1
-        meta = state["meta"]
+        meta = tx.meta
         pcols = meta.get("partitionColumns") or None
         if _column_mapping(meta):
             raise ValueError(
@@ -1767,30 +1673,117 @@ def txn_append(
             )
         # a streaming micro-batch omitting a generated column gets it
         # computed from the committed schema, same contract as write()
-        df = _apply_generated(df, meta, "txn_append batch")
+        df = _apply_generated(df, _generated_exprs(meta), "txn_append batch")
         _enforce_constraints(df, meta, "txn_append batch")
         # reuse the TABLE's metaData (validated/widened) — a narrower or
         # retyped batch must never replace the committed schema, and the
         # table's partitioning is preserved on the written files
-        meta_action = {
-            "metaData": dict(meta, schemaString=_evolved_schema(meta, df).json())
-        }
+        meta = dict(meta, schemaString=_evolved_schema(meta, df).json())
     else:
-        version = 0
-        meta_action = _meta_action(df, uuid.uuid4().hex)
+        meta = _new_meta(df, uuid.uuid4().hex)
     adds = _write_data_files(df, table_path, pcols)
-    actions: list[dict] = [
-        {"commitInfo": {"operation": "STREAMING UPDATE", "timestamp": int(time.time() * 1000)}},
-        _protocol_action(
-            meta_action["metaData"],
-            prior=state.get("protocol") if versions else None,
-        ),
-        meta_action,
-        {"txn": {"appId": app_id, "version": txn_version}},
-        *({"add": a} for a in adds),
-    ]
-    _commit(table_path, version, actions)
-    return version
+    return tx.commit(
+        "STREAMING UPDATE",
+        meta,
+        [{"add": a} for a in adds],
+        txn={app_id: txn_version},
+    )
+
+
+# the boolean column a DML verb's tag adds to a candidate scan: True on
+# the rows the verb rewrites (deletes, updates, or merges over)
+_MATCHED_COL = "__dl_matched"
+
+
+def _matched_files(tagged: DataFrame) -> set[str]:
+    """Names of the files holding a tagged row, in ONE job: the tagged
+    row-address scan (pruned to the tag's input columns) runs into a
+    no-op sink while an observed ``collect_set`` gathers the names — no
+    shuffle, and at most one name per file per task reaches the
+    driver."""
+    obs = Observation()
+    (
+        tagged.filter(F.col(_MATCHED_COL))
+        .select(_DV_FILE_COL)
+        .observe(obs, F.collect_set(_DV_FILE_COL).alias("files"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    return set(obs.get["files"])
+
+
+def _rewrite_matched(
+    spark: SparkSession,
+    tx: _Txn,
+    op: str,
+    candidates: dict,
+    tag,
+    rows,
+    deletion_vectors: bool,
+    commit_unmatched: bool = False,
+    txn: dict[str, int] | None = None,
+) -> tuple[int, int]:
+    """The body MERGE, DELETE and UPDATE share. Each verb supplies its
+    ``candidates`` (the active files its stats cannot rule out), its
+    ``tag`` (adds the never-NULL boolean ``_MATCHED_COL`` to a candidate
+    scan) and ``rows(pre)``: the rows to add and the change rows, given
+    the matched pre-images — or ``None`` when no candidate holds a
+    matched row.
+
+    Copy-on-write: a one-job probe (``_matched_files``) keeps exactly
+    the candidates that hold a matched row; each is removed and its
+    unmatched rows are written again together with the verb's rows, so
+    a file whose stats the tag grazes keeps its bytes. Deletion vectors:
+    the matched row addresses go to ONE tombstone sidecar and each file
+    that gained tombstones is re-pointed at it (a fully dead file is
+    removed); no data file is rewritten. On a ``delta.appendOnly`` table
+    the probe also runs before the DV path, and a match is refused.
+
+    A DELETE/UPDATE that matches no row commits nothing; a MERGE
+    (``commit_unmatched``) still commits its inserts. One commit on the
+    verb's snapshot otherwise. Returns (version, files touched)."""
+    path, meta = tx.table_path, tx.meta
+    if candidates and (not deletion_vectors or _is_append_only(meta)):
+        names = _matched_files(
+            tag(_scan_active(spark, path, meta, candidates, with_row_address=True))
+        )
+        if names:
+            _check_append_only(meta, f"{op} that matches existing rows")
+        # __dl_file is the parquet file NAME — unique per table (the same
+        # invariant the deletion-vector tombstone join relies on)
+        candidates = {
+            p: a for p, a in candidates.items() if os.path.basename(p) in names
+        }
+    dv = deletion_vectors and bool(candidates)
+    out_cols = [f["name"] for f in json.loads(meta["schemaString"])["fields"]]
+    pre = tagged = None
+    if candidates:
+        tagged = tag(_scan_active(spark, path, meta, candidates, with_row_address=dv))
+        pre = tagged.filter(F.col(_MATCHED_COL))
+    added, changes = rows(None if pre is None else pre.select(*out_cols))
+    actions: list[dict] = []
+    touched = len(candidates)
+    if dv:
+        dv_name, counts = _write_tombstones(spark, path, candidates, pre)
+        actions, touched = _dv_repoint_actions(candidates, dv_name, counts)
+        if not touched:  # the tag grazed the stats but matched no row
+            _remove_sidecar(path, dv_name)
+    elif candidates:
+        actions = _removes(candidates)
+        survivors = tagged.filter(~F.col(_MATCHED_COL)).select(*out_cols)
+        added = survivors if added is None else survivors.unionByName(added)
+    if not (touched or commit_unmatched):
+        return tx.version, 0
+    mapping = _column_mapping(meta)
+    if added is not None:
+        pcols = meta.get("partitionColumns") or None
+        adds = _write_data_files(_to_physical(added, mapping), path, pcols)
+        actions += [{"add": a} for a in adds]
+    if changes is not None:
+        cdc = _write_data_files(_to_physical(changes, mapping), path, change_data=True)
+        actions += [{"cdc": c} for c in cdc]
+    return tx.commit(op, meta, actions, dv=dv, txn=txn), touched
 
 
 # (column, op, literal) filter triples as Spark predicates (DELETE/UPDATE)
@@ -1804,21 +1797,34 @@ _FILTER_OPS = {
 }
 
 
+def _filter_target(tx: _Txn, filters: list[tuple]):
+    """DELETE/UPDATE's candidates and tag: the active files whose stats
+    overlap ``filters`` (the (column, op, literal) triples data skipping
+    uses), and the rows matching ALL of them — a NULL comparison is no
+    match, so the row is kept (SQL DML)."""
+    match = F.lit(True)
+    for col, op, lit in filters:
+        match = match & _FILTER_OPS[op](F.col(col), F.lit(lit))
+    match = F.coalesce(match, F.lit(False))
+    return _prune(tx.state, filters), lambda df: df.withColumn(_MATCHED_COL, match)
+
+
 def delete(
     spark: SparkSession,
     table_path: str,
     filters: list[tuple],
-    change_feed: bool = True,
     deletion_vectors: bool = False,
 ) -> tuple[int, int, int]:
     """Targeted copy-on-write DELETE: remove every row matching ALL
     ``filters`` (the same (column, op, literal) triples data skipping
     uses). Files whose stats PROVE they hold no matching row are left
-    untouched — their bytes are never read or rewritten; only
-    potentially-matching files are rewritten without the matching rows,
-    and the whole operation is ONE atomic commit (removes for the
-    rewritten files + adds for their replacements; a fully-matched file
-    simply gets no replacement).
+    untouched — their bytes are never read or rewritten; the files that
+    hold a matching row are rewritten without it, and the whole
+    operation is ONE atomic commit (removes for the rewritten files +
+    adds for their replacements; a fully-matched file simply gets no
+    replacement). A file whose stats the predicate grazes but which
+    holds no matching row keeps its bytes too; a delete matching no row
+    commits nothing.
 
     With ``deletion_vectors=True`` the delete is MERGE-ON-READ (modern
     Delta's deletion vectors): instead of rewriting any data file, the
@@ -1832,7 +1838,10 @@ def delete(
     predicate grazes thousands of wide files. OPTIMIZE purges
     tombstones naturally (it rewrites from the DV-applied read); the
     real spec's per-file roaring bitmaps are represented here as a
-    parquet tombstone set, same protocol semantics.
+    parquet tombstone set, same protocol semantics. The deleted rows go
+    to the change feed either way (a DV commit's adds and removes do not
+    describe row-level change: the re-added file still holds the dead
+    rows).
 
     Returns (committed version, files untouched, files rewritten —
     for DV mode, files re-pointed or dropped).
@@ -1843,130 +1852,19 @@ def delete(
     contain the rows — contrast ``plans/runner.py:erase``, which must
     rewrite every table wholesale when keys are scattered. Real delta
     works identically (file-skipping + copy-on-write + one commit)."""
-    # capture the snapshot version ONCE and commit at snapshot+1 (see
-    # merge: a concurrent commit must fail the O_EXCL create, not be
-    # silently clobbered)
-    snap_version = _list_versions(table_path)[-1]
-    state = _replay_state(table_path, snap_version)
-    _assert_writable(state.get("protocol"), table_path)
-    active, meta = state["active"], state["meta"]
-    _check_append_only(meta, "DELETE")
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    mapping = _column_mapping(meta)
-    phys_filters = _translate_filters(filters, mapping)
-    untouched, rewrite = [], []
-    for p in sorted(active):
-        (untouched if _maybe_skip(active[p], phys_filters) else rewrite).append(p)
-    pcols = meta.get("partitionColumns") or None
-    adds: list[dict] = []
-    cdc_adds: list[dict] = []
-    match = F.lit(True)
-    for col, op, lit in filters:
-        match = match & _FILTER_OPS[op](F.col(col), F.lit(lit))
-    if deletion_vectors and not change_feed:
-        # a DV commit's adds/removes do NOT describe row-level change
-        # (the re-added file still contains the dead rows) — without cdc
-        # rows the change feed would resurrect them. COW deletes are the
-        # change_feed=False path.
-        raise ValueError("deletion_vectors=True requires change_feed=True")
-    if deletion_vectors and rewrite:
-        return _delete_with_dv(
-            spark,
-            table_path,
-            snap_version,
-            meta,
-            {p: active[p] for p in rewrite},
-            untouched,
-            match,
-            change_feed,
-            prior_protocol=state.get("protocol"),
-        )
-    if rewrite:
-        df = _scan_active(
-            spark, table_path, meta, {p: active[p] for p in rewrite}
-        )
-        # stats-grazed predicate, zero matching rows: no rewrite, no
-        # commit (same zero-match gate as the DV path's touched counter)
-        if df.filter(F.coalesce(match, F.lit(False))).isEmpty():
-            return snap_version, len(untouched) + len(rewrite), 0
-        # NULL predicate = row does NOT match = row is KEPT (SQL DELETE)
-        kept = df.filter(F.coalesce(~match, F.lit(True)))
-        if change_feed:
-            # CDC files carry PHYSICAL names, like data files — a later
-            # rename must not orphan them
-            deleted = df.filter(F.coalesce(match, F.lit(False)))
-            deleted = deleted.withColumn(CHANGE_TYPE_COL, F.lit("delete"))
-            cdc_adds = _write_data_files(
-                _to_physical(deleted, mapping), table_path, change_data=True
-            )
-        adds = _write_data_files(_to_physical(kept, mapping), table_path, pcols)
-    now_ms = int(time.time() * 1000)
-    version = snap_version + 1
-    actions: list[dict] = [
-        {"commitInfo": {"operation": "DELETE", "timestamp": now_ms}},
-        _protocol_action(meta, prior=state.get("protocol")),
-        {"metaData": meta},
-        *(
-            {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
-            for p in rewrite
-        ),
-        *({"add": a} for a in adds),
-        *({"cdc": c} for c in cdc_adds),
-    ]
-    _commit(table_path, version, actions)
-    return version, len(untouched), len(rewrite)
+    tx = _begin(table_path)
+    _check_append_only(tx.meta, "DELETE")
+    candidates, tag = _filter_target(tx, filters)
 
+    def rows(pre: DataFrame | None):
+        if pre is None:
+            return None, None
+        return None, pre.withColumn(CHANGE_TYPE_COL, F.lit("delete"))
 
-def _delete_with_dv(
-    spark: SparkSession,
-    table_path: str,
-    snap_version: int,
-    meta: dict,
-    candidates: dict,
-    untouched: list[str],
-    match,
-    change_feed: bool,
-    prior_protocol: dict | None = None,
-) -> tuple[int, int, int]:
-    """Merge-on-read DELETE body: tombstone matching row addresses
-    instead of rewriting data files. One commit: remove+re-add (same
-    path, new deletionVector) per file that gained tombstones, remove
-    only for fully-dead files, cdc delete rows for the change feed."""
-    mapping = _column_mapping(meta)
-    # scan candidates with row addresses; prior tombstones already
-    # anti-joined away, so re-deleting a row is impossible
-    df = _scan_active(
-        spark, table_path, meta, candidates, with_row_address=True
+    version, touched = _rewrite_matched(
+        spark, tx, "DELETE", candidates, tag, rows, deletion_vectors
     )
-    matched = df.filter(F.coalesce(match, F.lit(False)))
-    dv_name, counts = _write_tombstones(spark, table_path, candidates, matched)
-    cdc_adds: list[dict] = []
-    if change_feed:
-        deleted = matched.drop(_DV_FILE_COL, _DV_ROW_COL).withColumn(
-            CHANGE_TYPE_COL, F.lit("delete")
-        )
-        cdc_adds = _write_data_files(
-            _to_physical(deleted, mapping), table_path, change_data=True
-        )
-    now_ms = int(time.time() * 1000)
-    removes, re_adds, touched = _dv_repoint_actions(
-        candidates, dv_name, counts, now_ms
-    )
-    if not touched:
-        _remove_sidecar(table_path, dv_name)
-        return snap_version, len(untouched) + len(candidates), 0
-    version = snap_version + 1
-    actions: list[dict] = [
-        {"commitInfo": {"operation": "DELETE", "timestamp": now_ms}},
-        _protocol_action(meta, dv=True, prior=prior_protocol, table_path=None
-                         if prior_protocol else table_path),
-        {"metaData": meta},
-        *removes,
-        *re_adds,
-        *({"cdc": c} for c in cdc_adds),
-    ]
-    _commit(table_path, version, actions)
-    return version, len(untouched) + (len(candidates) - touched), touched
+    return version, len(tx.active) - touched, touched
 
 
 # tombstone rows per sidecar shard before the write fans out to another
@@ -2042,25 +1940,21 @@ def _remove_sidecar(table_path: str, dv_name: str) -> None:
 
 
 def _dv_repoint_actions(
-    candidates: dict, dv_name: str, counts: dict, now_ms: int
-) -> tuple[list[dict], list[dict], int]:
+    candidates: dict, dv_name: str, counts: dict
+) -> tuple[list[dict], int]:
     """Remove + re-add (same path, new deletionVector) for every
     candidate that gained tombstones or already carried a sidecar;
-    fully-dead files get the remove only. Returns (removes, re_adds,
-    touched count)."""
-    removes: list[dict] = []
+    fully-dead files get the remove only. Returns (actions, touched
+    count)."""
+    touched = [
+        p
+        for p, a in candidates.items()
+        # no new tombstone and no sidecar: the tag grazed the stats only
+        if counts.get(os.path.basename(p), 0) or a.get("deletionVector")
+    ]
     re_adds: list[dict] = []
-    touched = 0
-    for p, a in candidates.items():
-        name = os.path.basename(p)
-        n_dead = counts.get(name, 0)
-        had_dv = bool(a.get("deletionVector"))
-        if n_dead == 0 and not had_dv:
-            continue  # predicate grazed the stats but matched no row
-        touched += 1
-        removes.append(
-            {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
-        )
+    for p in touched:
+        a, n_dead = candidates[p], counts.get(os.path.basename(p), 0)
         total = None
         try:
             total = json.loads(a.get("stats", "{}")).get("numRecords")
@@ -2077,7 +1971,7 @@ def _dv_repoint_actions(
                 )
             }
         )
-    return removes, re_adds, touched
+    return _removes(touched) + re_adds, len(touched)
 
 
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024  # real OPTIMIZE default ballpark
@@ -2128,14 +2022,8 @@ def optimize(
     ZORDER operates WITHIN each partition (like real OPTIMIZE ZORDER):
     each bucket write carries partitionBy, so every partition directory
     ends up with ≤ n_files Z-contiguous files."""
-    # capture the snapshot version ONCE and commit at snapshot+1: a
-    # concurrent commit landing in between makes the O_EXCL create fail
-    # (ConcurrentWriteError) instead of being silently clobbered
-    versions = _list_versions(table_path)
-    snap_version = versions[-1]
-    state = _replay_state(table_path, snap_version)
-    _assert_writable(state.get("protocol"), table_path)
-    active, meta = state["active"], state["meta"]
+    tx = _begin(table_path)
+    active, meta = tx.active, tx.meta
     pcols = meta.get("partitionColumns") or None
     mapping = _column_mapping(meta)
     if min_file_size is not None:
@@ -2150,13 +2038,13 @@ def optimize(
             if a.get("size", 0) < min_file_size
         )
         if len(prior) <= 1:
-            return snap_version  # nothing worth compacting — no commit
+            return tx.version  # nothing worth compacting — no commit
         snap = _scan_active(
             spark, table_path, meta, {p: active[p] for p in prior}
         )
     else:
         prior = sorted(active)
-        snap = read(spark, table_path, version=snap_version)
+        snap = read(spark, table_path, version=tx.version)
     if n_files is None:
         # size-targeted bin-packing: enough output files that each lands
         # near target_file_size; never zero, never a single-task rewrite
@@ -2212,24 +2100,15 @@ def optimize(
         # OPTIMIZE's bin-packing does on a cluster
         part = _to_physical(snap.coalesce(n_files), mapping)
         adds = _write_data_files(part, table_path, pcols)
-    now_ms = int(time.time() * 1000)
     for a in adds:
         a["dataChange"] = False
-    actions: list[dict] = [
-        {"commitInfo": {"operation": "OPTIMIZE", "timestamp": now_ms}},
-        _protocol_action(meta, prior=state.get("protocol")),
-        # layout-only commit: metaData preserved VERBATIM (schema,
-        # partitioning, column mapping, table configuration)
-        {"metaData": meta},
-        *(
-            {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": False}}
-            for p in prior
-        ),
-        *({"add": a} for a in adds),
-    ]
-    version = snap_version + 1
-    _commit(table_path, version, actions)
-    return version
+    # layout-only commit: metaData preserved VERBATIM (schema,
+    # partitioning, column mapping, table configuration)
+    return tx.commit(
+        "OPTIMIZE",
+        meta,
+        _removes(prior, data_change=False) + [{"add": a} for a in adds],
+    )
 
 
 def vacuum(
@@ -2604,10 +2483,8 @@ def restore(spark: SparkSession, table_path: str, version: int) -> int:
     RESTORE documents).
 
     Scale: pure metadata — no data file is read, copied, or rewritten."""
-    versions = _list_versions(table_path)
-    snap_version = versions[-1]
-    cur = _replay_state(table_path, snap_version)
-    _assert_writable(cur.get("protocol"), table_path)
+    tx = _begin(table_path)
+    cur = tx.state
     old = _replay_state(table_path, version)
     needed = set(old["active"])
     needed.update(
@@ -2623,7 +2500,6 @@ def restore(spark: SparkSession, table_path: str, version: int) -> int:
             f"cannot restore to version {version}: {len(missing)} data "
             f"file(s) were vacuumed (first: {missing[0]})"
         )
-    now_ms = int(time.time() * 1000)
     removes = [p for p in sorted(cur["active"]) if p not in old["active"]]
     if removes:
         # appendOnly forbids dataChange removes; a pure re-add rollback
@@ -2637,20 +2513,13 @@ def restore(spark: SparkSession, table_path: str, version: int) -> int:
         for p in sorted(old["active"])
         if cur["active"].get(p) != old["active"][p]
     ]
-    actions: list[dict] = [
-        {"commitInfo": {"operation": "RESTORE", "timestamp": now_ms}},
-        # ratchet against the CURRENT protocol: restore rewinds data,
-        # never the protocol (spec: downgrades are illegal)
-        _protocol_action(old["meta"], prior=cur.get("protocol")),
-        {"metaData": old["meta"]},
-        *(
-            {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
-            for p in removes
-        ),
-        *({"add": dict(a, dataChange=True)} for a in adds),
-    ]
-    _commit(table_path, snap_version + 1, actions)
-    return snap_version + 1
+    # the commit ratchets against the CURRENT protocol: restore rewinds
+    # data, never the protocol (spec: downgrades are illegal)
+    return tx.commit(
+        "RESTORE",
+        old["meta"],
+        _removes(removes) + [{"add": dict(a, dataChange=True)} for a in adds],
+    )
 
 
 def describe_history(table_path: str) -> list[dict]:
@@ -2701,7 +2570,8 @@ def convert_to_delta(
     At 100 TB this is the adoption path: converting a petabyte lake is a
     file LISTING plus footer reads, not a rewrite — exactly why the real
     feature exists (Delta spec / ``CONVERT TO DELTA`` DDL)."""
-    if _list_versions(table_path):
+    tx = _begin(table_path, create=True)
+    if tx.version >= 0:
         raise ValueError(f"{table_path} is already a DeltaLite table")
     reader = spark.read.option("basePath", table_path)
     df = reader.parquet(table_path)
@@ -2744,27 +2614,9 @@ def convert_to_delta(
         raise ValueError(
             f"partition_by {pcols} != directory layout {sorted(pcols_found)}"
         )
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "CONVERT",
-                "timestamp": now_ms,
-            }
-        },
-        _protocol_action(None),
-        {
-            "metaData": {
-                "id": uuid.uuid4().hex,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": df.schema.json(),
-                "partitionColumns": pcols,
-                "configuration": {},
-            }
-        },
-        *({"add": a} for a in adds),
-    ]
-    _commit(table_path, 0, actions)
-    return 0
+    return tx.commit(
+        "CONVERT", _new_meta(df, uuid.uuid4().hex, pcols), [{"add": a} for a in adds]
+    )
 
 
 def clone(
@@ -2799,12 +2651,12 @@ def clone(
     state = _replay_state(src_path, version)
     # a clone re-interprets the source's files, so the source snapshot's
     # protocol must be readable HERE — and must carry over to the clone
-    # (via prior= below), else cloning a table whose protocol demands an
+    # (its commit 0 ratchets against it), else cloning a table whose protocol demands an
     # unknown reader feature would commit a downgraded clone that later
     # reads silently misinterpret
     _assert_readable(state.get("protocol"), src_path)
-    meta = state["meta"]
-    if _list_versions(dst_path):
+    tx = _begin(dst_path, create=True)
+    if tx.version >= 0:
         raise ValueError(f"{dst_path} is already a DeltaLite table")
     os.makedirs(dst_path, exist_ok=True)
     src_abs = os.path.abspath(src_path)
@@ -2826,18 +2678,13 @@ def clone(
         a["dataChange"] = True
         a["modificationTime"] = now_ms
         adds.append(a)
-    actions = [
-        {"commitInfo": {"operation": "CLONE", "timestamp": now_ms}},
-        _protocol_action(
-            meta,
-            dv=any(a.get("deletionVector") for a in adds),
-            prior=state.get("protocol"),
-        ),
-        {"metaData": dict(meta, id=uuid.uuid4().hex)},
-        *({"add": a} for a in adds),
-    ]
-    _commit(dst_path, 0, actions)
-    return 0
+    tx.state["protocol"] = state.get("protocol")
+    return tx.commit(
+        "CLONE",
+        dict(state["meta"], id=uuid.uuid4().hex),
+        [{"add": a} for a in adds],
+        dv=any(a.get("deletionVector") for a in adds),
+    )
 
 
 def update(
@@ -2845,37 +2692,30 @@ def update(
     table_path: str,
     filters: list[tuple],
     set_exprs: dict[str, str],
-    change_feed: bool = True,
     deletion_vectors: bool = False,
 ) -> tuple[int, int, int]:
     """UPDATE ... SET ... WHERE — the third DML verb, same pruning and
     commit discipline as DELETE/MERGE: only files whose stats overlap
     ``filters`` are candidates; matching rows get ``set_exprs`` (column
-    -> Spark SQL expression over the logical columns) applied and are
-    re-written, non-matching rows pass through; ONE atomic commit.
+    -> Spark SQL expression over the logical columns) applied, and the
+    files holding them are re-written with the non-matching rows passing
+    through; ONE atomic commit, none when no row matches.
 
     ``deletion_vectors=True`` makes it merge-on-read: matched pre-image
     rows are tombstoned in place and only the UPDATED rows land as a new
     append — update cost ∝ matching rows, not candidate-file bytes.
-    CDF rows (update_preimage/update_postimage) are written either way
-    when ``change_feed`` (required for DV mode, like delete/merge).
+    CDF rows (update_preimage/update_postimage) are written either way.
 
     Returns (version, files untouched, files rewritten/re-pointed)."""
-    if deletion_vectors and not change_feed:
-        raise ValueError("deletion_vectors=True requires change_feed=True")
-    snap_version = _list_versions(table_path)[-1]
-    state = _replay_state(table_path, snap_version)
-    _assert_writable(state.get("protocol"), table_path)
-    active, meta = state["active"], state["meta"]
+    tx = _begin(table_path)
+    meta = tx.meta
     _check_append_only(meta, "UPDATE")
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    mapping = _column_mapping(meta)
-    out_cols = [f.name for f in schema.fields]
-    bad = set(set_exprs) - set(out_cols)
+    types = {f.name: f.dataType for f in schema.fields}
+    bad = set(set_exprs) - set(types)
     if bad:
         raise ValueError(f"SET on unknown column(s): {sorted(bad)}")
-    pcols = meta.get("partitionColumns") or []
-    if set(set_exprs) & set(pcols):
+    if set(set_exprs) & set(meta.get("partitionColumns") or []):
         raise ValueError("updating a partition column is not supported")
     gen = _generated_exprs(meta)
     direct = set(set_exprs) & set(gen)
@@ -2886,112 +2726,33 @@ def update(
             f"cannot SET generated column(s) {sorted(direct)}; update "
             "their inputs and the expressions recompute"
         )
-    phys_filters = _translate_filters(filters, mapping)
-    untouched, candidates = [], {}
-    for p in sorted(active):
-        if _maybe_skip(active[p], phys_filters):
-            untouched.append(p)
-        else:
-            candidates[p] = active[p]
-    match = F.lit(True)
-    for col, op, lit in filters:
-        match = match & _FILTER_OPS[op](F.col(col), F.lit(lit))
+    candidates, tag = _filter_target(tx, filters)
 
-    def apply_set(df: DataFrame) -> DataFrame:
+    def rows(pre: DataFrame | None):
+        if pre is None:
+            return None, None
         # conform each SET expression back to the COMMITTED column type
         # so the written files match the preserved metaData
-        types = {f.name: f.dataType for f in schema.fields}
-        out = df.select(
+        post = pre.select(
             *[
-                (
-                    F.expr(set_exprs[c]).cast(types[c]).alias(c)
-                    if c in set_exprs
-                    else F.col(c)
-                )
-                for c in out_cols
+                F.expr(set_exprs[c]).cast(t).alias(c) if c in set_exprs else F.col(c)
+                for c, t in types.items()
             ]
         )
         # generated columns recompute from the POST-SET values (writer
         # invariant: the stored expression always holds)
         for gcol, gexpr in gen.items():
-            out = out.withColumn(gcol, F.expr(gexpr).cast(types[gcol]))
-        return out
+            post = post.withColumn(gcol, F.expr(gexpr).cast(types[gcol]))
+        _enforce_constraints(post, meta, "UPDATE post-image")
+        changes = pre.withColumn(CHANGE_TYPE_COL, F.lit("update_preimage")).unionByName(
+            post.withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
+        )
+        return post, changes
 
-    now_ms = int(time.time() * 1000)
-    adds: list[dict] = []
-    cdc_adds: list[dict] = []
-    removes: list[dict] = []
-    re_adds: list[dict] = []
-    touched = 0
-    if candidates:
-        if deletion_vectors:
-            df = _scan_active(
-                spark, table_path, meta, candidates, with_row_address=True
-            )
-            matched = df.filter(F.coalesce(match, F.lit(False)))
-            dv_name, counts = _write_tombstones(
-                spark, table_path, candidates, matched
-            )
-            removes, re_adds, touched = _dv_repoint_actions(
-                candidates, dv_name, counts, now_ms
-            )
-            pre = matched.drop(_DV_FILE_COL, _DV_ROW_COL)
-            post = apply_set(pre)
-            _enforce_constraints(post, meta, "UPDATE post-image")
-            if not touched:
-                _remove_sidecar(table_path, dv_name)
-            else:
-                adds = _write_data_files(
-                    _to_physical(post, mapping), table_path, pcols or None
-                )
-        else:
-            df = _scan_active(spark, table_path, meta, candidates)
-            pre = df.filter(F.coalesce(match, F.lit(False)))
-            # a stats-grazed predicate that matches NO row must not
-            # rewrite candidates (full-file delete+insert churn in the
-            # change feed for zero content change) — probe before
-            # committing, mirroring the DV path's touched counter
-            if pre.isEmpty():
-                return snap_version, len(untouched) + len(candidates), 0
-            post = apply_set(pre)
-            _enforce_constraints(post, meta, "UPDATE post-image")
-            result = df.filter(F.coalesce(~match, F.lit(True))).unionByName(
-                post
-            )
-            touched = len(candidates)
-            removes = [
-                {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
-                for p in candidates
-            ]
-            adds = _write_data_files(
-                _to_physical(result, mapping), table_path, pcols or None
-            )
-        if change_feed and touched:
-            changes = pre.withColumn(
-                CHANGE_TYPE_COL, F.lit("update_preimage")
-            ).unionByName(
-                post.withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
-            )
-            cdc_adds = _write_data_files(
-                _to_physical(changes, mapping), table_path, change_data=True
-            )
-    if not touched:
-        return snap_version, len(untouched) + len(candidates), 0
-    proto = _protocol_action(
-        meta, dv=deletion_vectors, prior=state.get("protocol")
+    version, touched = _rewrite_matched(
+        spark, tx, "UPDATE", candidates, tag, rows, deletion_vectors
     )
-    version = snap_version + 1
-    actions: list[dict] = [
-        {"commitInfo": {"operation": "UPDATE", "timestamp": now_ms}},
-        proto,
-        {"metaData": meta},
-        *removes,
-        *re_adds,
-        *({"add": a} for a in adds),
-        *({"cdc": c} for c in cdc_adds),
-    ]
-    _commit(table_path, version, actions)
-    return version, len(untouched) + (len(candidates) - touched), touched
+    return version, len(tx.active) - touched, touched
 
 
 # --------------------------------------------------------------------------
@@ -3041,14 +2802,11 @@ def add_check_constraint(
     expression in the table configuration with ONE metadata commit —
     every subsequent write/merge/update batch is checked before it may
     commit."""
-    versions = _list_versions(table_path)
-    snap_version = versions[-1]
-    state = _replay_state(table_path, snap_version)
-    _assert_writable(state.get("protocol"), table_path)
-    meta = state["meta"]
+    tx = _begin(table_path)
+    meta = tx.meta
     if f"{_CONSTRAINT_PREFIX}{name}" in (meta.get("configuration") or {}):
         raise ValueError(f"constraint {name!r} already exists")
-    snap = _scan_active(spark, table_path, meta, state["active"])
+    snap = _scan_active(spark, table_path, meta, tx.active)
     bad = snap.filter(~F.coalesce(F.expr(expr), F.lit(False))).limit(1)
     row = bad.collect()  # 1-row probe
     if row:
@@ -3063,54 +2821,16 @@ def add_check_constraint(
             f"{_CONSTRAINT_PREFIX}{name}": expr,
         },
     )
-    version = snap_version + 1
-    _commit(
-        table_path,
-        version,
-        [
-            {
-                "commitInfo": {
-                    "operation": "ADD CONSTRAINT",
-                    "timestamp": int(time.time() * 1000),
-                }
-            },
-            _protocol_action(new_meta, prior=state.get("protocol")),
-            {"metaData": new_meta},
-        ],
-    )
-    return version
+    return tx.commit("ADD CONSTRAINT", new_meta, [])
 
 
 def drop_check_constraint(table_path: str, name: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT: one metadata commit."""
-    versions = _list_versions(table_path)
-    snap_version = versions[-1]
-    _dc_state = _replay_state(table_path, snap_version)
-    _assert_writable(_dc_state.get("protocol"), table_path)
-    meta = _dc_state["meta"]
-    key = f"{_CONSTRAINT_PREFIX}{name}"
-    conf = dict(meta.get("configuration") or {})
-    if key not in conf:
+    tx = _begin(table_path)
+    conf = dict(tx.meta.get("configuration") or {})
+    if conf.pop(f"{_CONSTRAINT_PREFIX}{name}", None) is None:
         raise ValueError(f"no constraint {name!r}")
-    conf.pop(key)
-    version = snap_version + 1
-    _commit(
-        table_path,
-        version,
-        [
-            {
-                "commitInfo": {
-                    "operation": "DROP CONSTRAINT",
-                    "timestamp": int(time.time() * 1000),
-                }
-            },
-            _protocol_action(
-                dict(meta, configuration=conf), prior=_dc_state.get("protocol")
-            ),
-            {"metaData": dict(meta, configuration=conf)},
-        ],
-    )
-    return version
+    return tx.commit("DROP CONSTRAINT", dict(tx.meta, configuration=conf), [])
 
 
 def set_table_property(table_path: str, key: str, value: str) -> int:
@@ -3122,31 +2842,17 @@ def set_table_property(table_path: str, key: str, value: str) -> int:
             f"use add_check_constraint for {key!r} (existing rows must "
             "be validated)"
         )
-    versions = _list_versions(table_path)
-    snap_version = versions[-1]
-    _sp_state = _replay_state(table_path, snap_version)
-    _assert_writable(_sp_state.get("protocol"), table_path)
-    meta = _sp_state["meta"]
+    tx = _begin(table_path)
     new_meta = dict(
-        meta,
-        configuration={**(meta.get("configuration") or {}), key: str(value)},
+        tx.meta,
+        configuration={**(tx.meta.get("configuration") or {}), key: str(value)},
     )
-    version = snap_version + 1
-    _commit(
-        table_path,
-        version,
-        [
-            {
-                "commitInfo": {
-                    "operation": "SET TBLPROPERTIES",
-                    "timestamp": int(time.time() * 1000),
-                }
-            },
-            _protocol_action(new_meta, prior=_sp_state.get("protocol")),
-            {"metaData": new_meta},
-        ],
-    )
-    return version
+    return tx.commit("SET TBLPROPERTIES", new_meta, [])
+
+
+def _is_append_only(meta: dict) -> bool:
+    conf = meta.get("configuration") or {}
+    return str(conf.get("delta.appendOnly", "")).lower() == "true"
 
 
 def _check_append_only(meta: dict, what: str) -> None:
@@ -3154,8 +2860,7 @@ def _check_append_only(meta: dict, what: str) -> None:
     remove data with dataChange=true are forbidden — the table only ever
     grows (audit/event-log tables). Layout-only commits (OPTIMIZE,
     dataChange=false) remain legal and are not routed through here."""
-    conf = meta.get("configuration") or {}
-    if str(conf.get("delta.appendOnly", "")).lower() == "true":
+    if _is_append_only(meta):
         raise ValueError(
             f"{what} is forbidden: table is delta.appendOnly "
             "(only appends are allowed)"
@@ -3176,11 +2881,8 @@ def drop_column(table_path: str, name: str) -> int:
     Guards: partition columns (the directory layout carries their name),
     the last remaining column, and columns referenced by a CHECK
     constraint (drop the constraint first), all matching real Delta."""
-    state = _replay_state(table_path)
-    _assert_writable(state.get("protocol"), table_path)
-    meta = state["meta"]
-    if not meta:
-        raise FileNotFoundError(f"no DeltaLite table at {table_path}")
+    tx = _begin(table_path)
+    meta = tx.meta
     if name in meta.get("partitionColumns", []):
         raise ValueError(f"cannot drop partition column {name!r}")
     sch = json.loads(meta["schemaString"])
@@ -3205,19 +2907,4 @@ def drop_column(table_path: str, name: str) -> int:
             "delta.columnMapping.mode": "name",
         },
     )
-    version = _list_versions(table_path)[-1] + 1
-    _commit(
-        table_path,
-        version,
-        [
-            {
-                "commitInfo": {
-                    "operation": "DROP COLUMN",
-                    "timestamp": int(time.time() * 1000),
-                }
-            },
-            _protocol_action(meta, prior=state.get("protocol")),
-            {"metaData": meta},
-        ],
-    )
-    return version
+    return tx.commit("DROP COLUMN", meta, [])

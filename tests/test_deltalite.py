@@ -1257,11 +1257,6 @@ def test_dv_vacuum_and_restore(spark, tdir):
     deltalite.restore(spark, tdir, vdel)
     assert {r.k for r in deltalite.read(spark, tdir).collect()} == {1, 2, 3, 4}
     assert v_back == vdel + 1
-    with pytest.raises(ValueError, match="change_feed"):
-        deltalite.delete(
-            spark, tdir, [("k", "=", 1)], change_feed=False,
-            deletion_vectors=True,
-        )
 
 
 def test_dv_merge_on_read(spark, tdir):
@@ -1322,11 +1317,6 @@ def test_dv_merge_insert_only_repoints_nothing(spark, tdir):
     state = deltalite._replay_state(tdir, v)
     assert all(not a.get("deletionVector") for a in state["active"].values())
     assert not any(f.startswith("dv-") for f in os.listdir(tdir))
-    with pytest.raises(ValueError, match="change_feed"):
-        deltalite.merge(
-            spark, _df(spark, [(0, "x")]), tdir, ["k"],
-            change_feed=False, deletion_vectors=True,
-        )
 
 
 def test_update_cow_and_dv(spark, tdir):

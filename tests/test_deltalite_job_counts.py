@@ -1,8 +1,8 @@
 """Spark jobs launched by DeltaLite's fixed per-commit work
 (sources/deltalite.py, plans/materialize.py), counted per job group with
 ``sc.statusTracker()``: snapshot reads and schema alignment come from
-the log alone, and a copy-on-write MERGE with its change feed stays
-within the job budget of the fused plan."""
+the log alone, and a copy-on-write MERGE, DELETE or UPDATE with its
+change feed stays within its job budget."""
 
 from __future__ import annotations
 
@@ -17,11 +17,16 @@ from dbt_spark_models_spark.sources import deltalite
 
 # jobs of one copy-on-write merge with the change feed on a two-file
 # table and a parquet source, under adaptive execution: fused source
-# probe 3, matched-file probe 3, data write 2 (source-key broadcast,
-# write), CDC write 3 (source-key broadcast, key window, write); a
-# separate duplicate check and key-range probe plus a three-join change
-# feed took 13
+# probe 3, matched-file probe 2 (source-key broadcast, observed scan),
+# data write 2 (source-key broadcast, write), CDC write 3 (source-key
+# broadcast, key window, write); a separate duplicate check and
+# key-range probe plus a three-join change feed took 13
 MERGE_JOB_BUDGET = 11
+# jobs of one copy-on-write DELETE / UPDATE with the change feed on a
+# two-file table, matching rows in one file: matched-file probe 1, data
+# write 1, CDC write 1
+DELETE_JOB_BUDGET = 3
+UPDATE_JOB_BUDGET = 3
 
 
 @pytest.fixture()
@@ -117,5 +122,37 @@ def test_cow_merge_with_change_feed_job_budget(spark, tdir, tmp_path):
     assert jobs <= MERGE_JOB_BUDGET, f"merge launched {jobs} jobs"
     assert {r.k: r.v for r in deltalite.read(spark, tdir).collect()} == {
         1: "a", 2: "B", 3: "c", 4: "d", 5: "e"
+    }
+    assert sum(1 for a in deltalite._commit_actions(tdir, v) if "cdc" in a) >= 1
+
+
+def _two_file_table(spark, tdir):
+    rows = spark.createDataFrame
+    deltalite.write(spark, rows([(1, "a"), (2, "b")], "k int, v string").coalesce(1), tdir)
+    deltalite.write(
+        spark, rows([(3, "c"), (4, "d")], "k int, v string").coalesce(1), tdir, "append"
+    )
+
+
+def test_cow_delete_with_change_feed_job_budget(spark, tdir):
+    _two_file_table(spark, tdir)
+    jobs, (v, _, _) = _jobs(
+        spark, "dl-delete", lambda: deltalite.delete(spark, tdir, [("k", "=", 2)])
+    )
+    assert jobs <= DELETE_JOB_BUDGET, f"delete launched {jobs} jobs"
+    assert sorted(r.k for r in deltalite.read(spark, tdir).collect()) == [1, 3, 4]
+    assert sum(1 for a in deltalite._commit_actions(tdir, v) if "cdc" in a) >= 1
+
+
+def test_cow_update_with_change_feed_job_budget(spark, tdir):
+    _two_file_table(spark, tdir)
+    jobs, (v, _, _) = _jobs(
+        spark,
+        "dl-update",
+        lambda: deltalite.update(spark, tdir, [("k", "=", 2)], {"v": "upper(v)"}),
+    )
+    assert jobs <= UPDATE_JOB_BUDGET, f"update launched {jobs} jobs"
+    assert {r.k: r.v for r in deltalite.read(spark, tdir).collect()} == {
+        1: "a", 2: "B", 3: "c", 4: "d"
     }
     assert sum(1 for a in deltalite._commit_actions(tdir, v) if "cdc" in a) >= 1

@@ -1,7 +1,8 @@
-"""DeltaLite MERGE parity (sources/deltalite.py ``merge``), default tier:
-copy-on-write and deletion-vector merges on the edge cases the fused
-plan must keep — final rows, the commit's file actions and the change
-feed of that commit, by ``_change_type``."""
+"""DeltaLite DML parity (sources/deltalite.py ``merge``, ``delete`` and
+``update``), default tier: copy-on-write and deletion-vector runs of the
+one shared matched-row rewrite on the edge cases it must keep — final
+rows, the commit's file actions and the change feed of that commit, by
+``_change_type``."""
 
 from __future__ import annotations
 
@@ -139,3 +140,101 @@ def test_keys_colliding_after_cast_rejected(spark, tdir):
     with pytest.raises(ValueError, match="duplicate"):
         _merge(spark, tdir, [("1", "x"), ("01", "y")], False, "k string, v string")
     assert deltalite.latest_version(tdir) == 0
+
+
+def _dml(spark, path, verb, *args, dv):
+    """Run ``deltalite.<verb>`` and return (its (version, untouched,
+    touched), rows after, removed paths, re-added paths, count of new
+    paths, change rows of its commit)."""
+    before = set(deltalite._replay_state(path)["active"])
+    out = getattr(deltalite, verb)(spark, path, *args, deletion_vectors=dv)
+    actions = deltalite._commit_actions(path, out[0])
+    removed = {a["remove"]["path"] for a in actions if "remove" in a}
+    added = {a["add"]["path"] for a in actions if "add" in a}
+    changes = Counter(
+        (r._change_type, r.k, r.v)
+        for r in deltalite.read_changes(spark, path, out[0], out[0]).collect()
+    )
+    got = Counter((r.k, r.v) for r in deltalite.read(spark, path).collect())
+    return out, got, removed, added & before, len(added - before), changes
+
+
+@MODES
+def test_delete_parity(spark, tdir, dv):
+    low, _high = _table(spark, tdir, [(1, "a"), (2, "b")], [(3, "c"), (4, "d")])
+    out, got, removed, readded, n_new, changes = _dml(
+        spark, tdir, "delete", [("k", "=", 2)], dv=dv
+    )
+    assert out == (2, 1, 1)
+    assert got == Counter({(1, "a"): 1, (3, "c"): 1, (4, "d"): 1})
+    # COW rewrites the low file's survivor; DV re-points the low file
+    assert removed == {low}
+    assert readded == (removed if dv else set())
+    assert n_new == (0 if dv else 1)
+    assert changes == Counter({("delete", 2, "b"): 1})
+
+
+@MODES
+def test_update_parity(spark, tdir, dv):
+    low, _high = _table(spark, tdir, [(1, "a"), (2, "b")], [(3, "c"), (4, "d")])
+    out, got, removed, readded, n_new, changes = _dml(
+        spark, tdir, "update", [("k", "=", 2)], {"v": "upper(v)"}, dv=dv
+    )
+    assert out == (2, 1, 1)
+    assert got == Counter({(1, "a"): 1, (2, "B"): 1, (3, "c"): 1, (4, "d"): 1})
+    assert removed == {low}
+    assert readded == (removed if dv else set())
+    # DV appends the post-image alone; COW writes the survivor and the
+    # post-image, each from its own branch of the rewrite's union
+    assert n_new == (1 if dv else 2)
+    assert changes == Counter(
+        {("update_preimage", 2, "b"): 1, ("update_postimage", 2, "B"): 1}
+    )
+
+
+@MODES
+@pytest.mark.parametrize("verb", ["delete", "update"])
+def test_zero_match_commits_nothing(spark, tdir, dv, verb):
+    """The predicate grazes the file's [0, 10] stats but matches no row:
+    no commit, no file written, no tombstone sidecar left behind."""
+    _table(spark, tdir, [(0, "a"), (10, "b")])
+    files = set(os.listdir(tdir))
+    args = ([("k", "=", 5)],) + (({"v": "upper(v)"},) if verb == "update" else ())
+    out = getattr(deltalite, verb)(spark, tdir, *args, deletion_vectors=dv)
+    assert out == (0, 1, 0)
+    assert deltalite.latest_version(tdir) == 0
+    assert set(os.listdir(tdir)) == files
+    got = Counter((r.k, r.v) for r in deltalite.read(spark, tdir).collect())
+    assert got == Counter({(0, "a"): 1, (10, "b"): 1})
+
+
+@MODES
+def test_delete_keeps_null_predicate_row(spark, tdir, dv):
+    (only,) = _table(spark, tdir, [(None, "n"), (1, "a")])
+    out, got, removed, readded, n_new, changes = _dml(
+        spark, tdir, "delete", [("k", "<=", 5)], dv=dv
+    )
+    assert out == (1, 0, 1)
+    assert got == Counter({(None, "n"): 1})  # NULL k does not match → kept
+    assert removed == {only}
+    assert readded == (removed if dv else set())
+    assert n_new == (0 if dv else 1)
+    assert changes == Counter({("delete", 1, "a"): 1})
+
+
+@MODES
+def test_delete_leaves_stats_grazed_file_untouched(spark, tdir, dv):
+    """k = 4 overlaps both files' stats ([0, 10] and [4, 6]) but only the
+    second holds a matching row: only that file is rewritten (COW) or
+    re-pointed (DV); the first keeps its committed path."""
+    wide, narrow = _table(spark, tdir, [(0, "a"), (10, "b")], [(4, "c"), (6, "d")])
+    out, got, removed, readded, n_new, changes = _dml(
+        spark, tdir, "delete", [("k", "=", 4)], dv=dv
+    )
+    assert out == (2, 1, 1)
+    assert got == Counter({(0, "a"): 1, (10, "b"): 1, (6, "d"): 1})
+    assert removed == {narrow}
+    assert wide in deltalite._replay_state(tdir)["active"]
+    assert readded == (removed if dv else set())
+    assert n_new == (0 if dv else 1)
+    assert changes == Counter({("delete", 4, "c"): 1})

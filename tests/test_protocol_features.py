@@ -67,7 +67,7 @@ def test_upgrade_in_history_is_monotonic(spark):
     assert (p["minReaderVersion"], p["minWriterVersion"]) == (2, 5)
 
     deltalite.delete(
-        spark, path, [("k", "<=", 3)], change_feed=True, deletion_vectors=True
+        spark, path, [("k", "<=", 3)], deletion_vectors=True
     )
     p = table_protocol(path)
     assert (p["minReaderVersion"], p["minWriterVersion"]) == (3, 7)
@@ -106,7 +106,7 @@ def test_checkpoint_preserves_protocol(spark):
     deltalite.write(spark, _df(spark), path, "overwrite")
     deltalite.set_table_property(path, "delta.enableChangeDataFeed", "true")
     deltalite.delete(
-        spark, path, [("k", "<=", 2)], change_feed=True, deletion_vectors=True
+        spark, path, [("k", "<=", 2)], deletion_vectors=True
     )
     before = table_protocol(path)
     # push past CHECKPOINT_INTERVAL so replay bootstraps from a checkpoint
@@ -299,7 +299,7 @@ if _HYP:
                         )
                         deltalite.delete(
                             spark, path, [("k", "<=", arg)],
-                            change_feed=True, deletion_vectors=True,
+                            deletion_vectors=True,
                         )
                     elif op == "delete":
                         deltalite.delete(spark, path, [("k", "<=", arg)])

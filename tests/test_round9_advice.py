@@ -85,7 +85,7 @@ def test_clone_carries_source_protocol(spark):
     deltalite.write(spark, _df(spark, 20), src, "overwrite")
     deltalite.set_table_property(src, "delta.enableChangeDataFeed", "true")
     deltalite.delete(
-        spark, src, [("k", "<=", 3)], change_feed=True, deletion_vectors=True
+        spark, src, [("k", "<=", 3)], deletion_vectors=True
     )
     sp = table_protocol(src)
     assert (sp["minReaderVersion"], sp["minWriterVersion"]) == (3, 7)
