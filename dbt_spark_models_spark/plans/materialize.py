@@ -26,6 +26,7 @@ to the distribute clause; at gate scale plain keys suffice.
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass
 from typing import Any
 
@@ -47,13 +48,24 @@ def table_exists(spark: SparkSession, database: str | None, name: str) -> bool:
     return spark.catalog.tableExists(_qualify(database, name))
 
 
+# {Py4J gateway: whether its JVM has the Delta Lake jars}
+_DELTA_ON_CLASSPATH: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def _delta_available(spark: SparkSession) -> bool:
-    """True when the Delta Lake jars are on the classpath (import-try)."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.spark.sql.delta.DeltaLog")
-        return True
-    except Exception:  # noqa: BLE001
-        return False
+    """True when the Delta Lake jars are on the classpath (import-try).
+    Probed once per JVM: its classpath cannot change while it runs, and
+    a failed probe is a Py4J exception round trip that PySpark then
+    converts with a dozen class lookups."""
+    gateway = spark.sparkContext._gateway
+    if gateway not in _DELTA_ON_CLASSPATH:
+        try:
+            spark._jvm.java.lang.Class.forName("org.apache.spark.sql.delta.DeltaLog")
+            found = True
+        except Exception:  # noqa: BLE001
+            found = False
+        _DELTA_ON_CLASSPATH[gateway] = found
+    return _DELTA_ON_CLASSPATH[gateway]
 
 
 def _layout_for_write(

@@ -1512,6 +1512,24 @@ def scan_file_counts(
     return len(_prune(state, skip_filters)), len(state["active"])
 
 
+@contextlib.contextmanager
+def _discard_on_error(tx: _Txn, adds: list[dict]):
+    """Delete the data files ``adds`` (written ahead of ``tx``'s commit)
+    when the block raises. They stay when a version file at snapshot + 1
+    exists and the error is not a lost commit race: that file may be
+    this commit's own, half written, and ``vacuum`` reclaims an
+    orphan."""
+    try:
+        yield
+    except BaseException as exc:
+        nxt = _version_file(tx.table_path, tx.version + 1)
+        if isinstance(exc, ConcurrentWriteError) or not os.path.exists(nxt):
+            for a in adds:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(tx.table_path, a["path"]))
+        raise
+
+
 def merge(
     spark: SparkSession,
     source: DataFrame,
@@ -1528,30 +1546,39 @@ def merge(
     add(replacements), so readers see pre- or post-merge state, never
     between. A NULL key never matches (SQL equality).
 
-    ONE fused probe aggregates the source (conformed to the committed
-    schema) by key: its largest rows-per-key count rejects duplicate-key
-    sources like delta's MERGE — keys that collide only once cast
-    included — and its per-key min/max prunes the candidate files by
-    stats. The matched-row tag is ONE left join of the candidate rows
-    against the source keys (broadcastable, so the target is not
-    shuffled and a rewritten file's survivors stay together); the
-    shared rewrite (``_rewrite_matched``) keeps exactly the files
-    holding a matched key (at 100 TB a merge aligned with the table's
-    clustering touches the handful of files holding the upserted keys,
-    not the table) and adds the whole source. The change feed is the
-    matched rows (update_preimage) in a tagged union with the source,
-    windowed by key to split update_postimage from insert — a shuffle of
-    source-sized data only (spec CDC: update rows appear twice, pure
-    inserts once; the files carry PHYSICAL names, rename-stable).
+    The source, conformed to the committed schema, is evaluated ONCE:
+    its rows are written first as the data files the merge adds (inert
+    until the commit references them), and every later step scans those
+    few files instead of re-running the source plan. So a
+    non-deterministic source cannot disagree with itself, and the data
+    and the change feed hold the same rows. A merge refused after the
+    write (duplicate keys, a CHECK violation, a match on an append-only
+    table, a lost commit race) deletes the written files.
+
+    ONE fused probe of the written rows aggregates them by key: the
+    largest rows-per-key count rejects duplicate-key sources like
+    delta's MERGE — keys that collide only once cast included — and the
+    per-key min/max prunes the candidate files by stats. The
+    matched-row tag is ONE left join of the candidate rows against the
+    source keys (broadcastable, so the target is not shuffled and a
+    rewritten file's survivors stay together); the shared rewrite
+    (``_rewrite_matched``) keeps exactly the files holding a matched key
+    (at 100 TB a merge aligned with the table's clustering touches the
+    handful of files holding the upserted keys, not the table) and
+    writes their survivors. The change feed is the matched rows
+    (update_preimage) in a tagged union with the source, windowed by key
+    to split update_postimage from insert — a shuffle of source-sized
+    data only (spec CDC: update rows appear twice, pure inserts once;
+    the files carry PHYSICAL names, rename-stable).
 
     ``deletion_vectors=True`` makes the merge MERGE-ON-READ: matched
     pre-image rows are tombstoned in place (no candidate file is
     rewritten — each is re-pointed at one sidecar, exactly like the DV
-    delete) and the WHOLE source (updates + inserts) lands as one new
-    append. Upsert cost becomes ∝ |source| + |matched rows|, not
-    ∝ bytes of every file holding a matched key — the shape that keeps
-    continuous upserts affordable on a 100 TB table; OPTIMIZE purges
-    the tombstones on its own schedule.
+    delete) and the source files are the only data written. Upsert
+    cost becomes ∝ |source| + |matched rows|, not ∝ bytes of every file
+    holding a matched key — the shape that keeps continuous upserts
+    affordable on a 100 TB table; OPTIMIZE purges the tombstones on its
+    own schedule.
 
     ``txn`` ({appId: version}) records SetTransaction watermarks in the
     merge's own commit (same contract as ``write(txn=...)``)."""
@@ -1569,75 +1596,78 @@ def merge(
     source = source.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )
-    _enforce_constraints(source, meta, "merge source")
-    # one driver-side row: duplicate check and key ranges in one pass
-    probe = (
-        source.groupBy(*keys)
-        .count()
-        .agg(
-            F.max("count").alias("__dl_dup"),
-            *[F.min(k).alias(f"mn_{k}") for k in keys],
-            *[F.max(k).alias(f"mx_{k}") for k in keys],
-        )
-        .collect()[0]
+    staged = _write_data_files(
+        _to_physical(source, _column_mapping(meta)),
+        table_path,
+        meta.get("partitionColumns") or None,
     )
-    if (probe["__dl_dup"] or 0) > 1:
-        raise ValueError("merge source has duplicate unique_key rows")
-    empty = probe["__dl_dup"] is None
-    candidates: dict = {}
-    # a key column that is NULL on every source row matches nothing
-    if not empty and all(probe[f"mn_{k}"] is not None for k in keys):
-        # a file can hold a matched key only if, for EVERY key column,
-        # its [min,max] intersects the source's [min,max]
-        candidates = _prune(
-            tx.state,
-            [
-                f
-                for k in keys
-                for f in ((k, "<=", probe[f"mx_{k}"]), (k, ">=", probe[f"mn_{k}"]))
-            ],
-        )
-    src_keys = source.select(*keys, F.lit(True).alias(_MATCHED_COL))
-
-    def tag(df: DataFrame) -> DataFrame:
-        return df.join(src_keys, keys, "left").withColumn(
-            _MATCHED_COL, F.col(_MATCHED_COL).isNotNull()
-        )
-
-    def rows(pre: DataFrame | None):
-        if empty:  # an empty source merges nothing
-            return None, None
-        if pre is None:  # no candidate holds a source key: insert-only
-            return source, source.withColumn(CHANGE_TYPE_COL, F.lit("insert"))
-        is_pre = F.col("__dl_side") == 0
-        has_tgt = F.max(is_pre).over(Window.partitionBy(*keys))
-        changes = (
-            pre.withColumn("__dl_side", F.lit(0))
-            .unionByName(source.withColumn("__dl_side", F.lit(1)))
-            .select(
-                *out_cols,
-                F.when(is_pre, "update_preimage")
-                .when(has_tgt, "update_postimage")
-                .otherwise("insert")
-                .alias(CHANGE_TYPE_COL),
+    with _discard_on_error(tx, staged):
+        source = _scan_active(spark, table_path, meta, {a["path"]: a for a in staged})
+        candidates: dict = {}
+        if staged:  # empty part files are never kept: no file, no row
+            _enforce_constraints(source, meta, "merge source")
+            # one driver-side row: duplicate check and key ranges in one pass
+            probe = (
+                source.groupBy(*keys)
+                .count()
+                .agg(
+                    F.max("count").alias("__dl_dup"),
+                    *[F.min(k).alias(f"mn_{k}") for k in keys],
+                    *[F.max(k).alias(f"mx_{k}") for k in keys],
+                )
+                .collect()[0]
             )
-        )
-        return source, changes
+            if probe["__dl_dup"] > 1:
+                raise ValueError("merge source has duplicate unique_key rows")
+            # a key column that is NULL on every source row matches nothing
+            if all(probe[f"mn_{k}"] is not None for k in keys):
+                # a file can hold a matched key only if, for EVERY key
+                # column, its [min,max] intersects the source's [min,max]
+                candidates = _prune(
+                    tx.state,
+                    [
+                        f
+                        for k in keys
+                        for f in (
+                            (k, "<=", probe[f"mx_{k}"]),
+                            (k, ">=", probe[f"mn_{k}"]),
+                        )
+                    ],
+                )
+        src_keys = source.select(*keys, F.lit(True).alias(_MATCHED_COL))
 
-    # delta.appendOnly is checked at COMMIT level, not operation level
-    # (r6 ADVICE #2): an insert-only merge is legal on an append-only
-    # table; the shared rewrite refuses one that matches a row
-    version, _ = _rewrite_matched(
-        spark,
-        tx,
-        "MERGE",
-        candidates,
-        tag,
-        rows,
-        deletion_vectors,
-        commit_unmatched=True,
-        txn=txn,
-    )
+        def tag(df: DataFrame) -> DataFrame:
+            return df.join(src_keys, keys, "left").withColumn(
+                _MATCHED_COL, F.col(_MATCHED_COL).isNotNull()
+            )
+
+        def rows(pre: DataFrame | None):
+            if not staged:  # an empty source merges nothing
+                return None, None
+            if pre is None:  # no candidate holds a source key: insert-only
+                return None, source.withColumn(CHANGE_TYPE_COL, F.lit("insert"))
+            is_pre = F.col("__dl_side") == 0
+            has_tgt = F.max(is_pre).over(Window.partitionBy(*keys))
+            changes = (
+                pre.withColumn("__dl_side", F.lit(0))
+                .unionByName(source.withColumn("__dl_side", F.lit(1)))
+                .select(
+                    *out_cols,
+                    F.when(is_pre, "update_preimage")
+                    .when(has_tgt, "update_postimage")
+                    .otherwise("insert")
+                    .alias(CHANGE_TYPE_COL),
+                )
+            )
+            return None, changes
+
+        # delta.appendOnly is checked at COMMIT level, not operation level
+        # (r6 ADVICE #2): an insert-only merge is legal on an append-only
+        # table; the shared rewrite refuses one that matches a row
+        version, _ = _rewrite_matched(
+            spark, tx, "MERGE", candidates, tag, rows, deletion_vectors,
+            staged=staged, txn=txn,
+        )
     return version
 
 
@@ -1721,7 +1751,7 @@ def _rewrite_matched(
     tag,
     rows,
     deletion_vectors: bool,
-    commit_unmatched: bool = False,
+    staged: list[dict] | None = None,
     txn: dict[str, int] | None = None,
 ) -> tuple[int, int]:
     """The body MERGE, DELETE and UPDATE share. Each verb supplies its
@@ -1740,9 +1770,11 @@ def _rewrite_matched(
     removed); no data file is rewritten. On a ``delta.appendOnly`` table
     the probe also runs before the DV path, and a match is refused.
 
-    A DELETE/UPDATE that matches no row commits nothing; a MERGE
-    (``commit_unmatched``) still commits its inserts. One commit on the
-    verb's snapshot otherwise. Returns (version, files touched)."""
+    ``staged`` are adds already written (MERGE's source, so its
+    ``rows`` adds nothing): they join the commit, which then lands even
+    when no row matched. A DELETE/UPDATE that matches no row commits
+    nothing. One commit on the verb's snapshot otherwise. Returns
+    (version, files touched)."""
     path, meta = tx.table_path, tx.meta
     if candidates and (not deletion_vectors or _is_append_only(meta)):
         names = _matched_files(
@@ -1773,13 +1805,14 @@ def _rewrite_matched(
         actions = _removes(candidates)
         survivors = tagged.filter(~F.col(_MATCHED_COL)).select(*out_cols)
         added = survivors if added is None else survivors.unionByName(added)
-    if not (touched or commit_unmatched):
+    if not touched and staged is None:
         return tx.version, 0
     mapping = _column_mapping(meta)
+    adds = list(staged or ())
     if added is not None:
         pcols = meta.get("partitionColumns") or None
-        adds = _write_data_files(_to_physical(added, mapping), path, pcols)
-        actions += [{"add": a} for a in adds]
+        adds += _write_data_files(_to_physical(added, mapping), path, pcols)
+    actions += [{"add": a} for a in adds]
     if changes is not None:
         cdc = _write_data_files(_to_physical(changes, mapping), path, change_data=True)
         actions += [{"cdc": c} for c in cdc]

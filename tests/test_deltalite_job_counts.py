@@ -16,11 +16,13 @@ from dbt_spark_models_spark.plans import materialize
 from dbt_spark_models_spark.sources import deltalite
 
 # jobs of one copy-on-write merge with the change feed on a two-file
-# table and a parquet source, under adaptive execution: fused source
-# probe 3, matched-file probe 2 (source-key broadcast, observed scan),
-# data write 2 (source-key broadcast, write), CDC write 3 (source-key
-# broadcast, key window, write); a separate duplicate check and
-# key-range probe plus a three-join change feed took 13
+# table and a parquet source, under adaptive execution: source write 1
+# (the only job that runs the source plan), fused probe of the written
+# files 3, matched-file probe 2 (source-key broadcast, observed scan),
+# survivors write 2 (source-key broadcast, write), CDC write 3
+# (source-key broadcast, key window, write); probing and writing the
+# source plan itself took 10, a separate duplicate check and key-range
+# probe plus a three-join change feed 13
 MERGE_JOB_BUDGET = 11
 # jobs of one copy-on-write DELETE / UPDATE with the change feed on a
 # two-file table, matching rows in one file: matched-file probe 1, data
@@ -156,3 +158,20 @@ def test_cow_update_with_change_feed_job_budget(spark, tdir):
         1: "a", 2: "B", 3: "c", 4: "d"
     }
     assert sum(1 for a in deltalite._commit_actions(tdir, v) if "cdc" in a) >= 1
+
+
+def test_delta_probe_runs_once_per_jvm(spark, monkeypatch):
+    """The classpath cannot change while the JVM runs, so a second
+    ``_delta_available`` for the same session makes no Py4J call."""
+    first = materialize._delta_available(spark)
+    client = spark.sparkContext._gateway._gateway_client
+    sent: list[str] = []
+    send = client.send_command
+
+    def counting(command, *a, **k):
+        sent.append(command)
+        return send(command, *a, **k)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    assert materialize._delta_available(spark) is first
+    assert sent == []

@@ -2,7 +2,8 @@
 ``update``), default tier: copy-on-write and deletion-vector runs of the
 one shared matched-row rewrite on the edge cases it must keep — final
 rows, the commit's file actions and the change feed of that commit, by
-``_change_type``."""
+``_change_type`` — plus MERGE's single evaluation of its source and the
+cleanup of a refused merge's written files."""
 
 from __future__ import annotations
 
@@ -124,12 +125,32 @@ def test_empty_source_commits_nothing(spark, tdir, dv):
     assert (removed, readded, n_new, changes) == (set(), set(), 0, Counter())
 
 
+def _assert_refused(path, version):
+    """A refused merge committed nothing and left no file behind: every
+    ``*.parquet`` under the table directory is one the log references."""
+    assert deltalite.latest_version(path) == version
+    referenced = {
+        a[kind]["path"]
+        for v in range(version + 1)
+        for a in deltalite._commit_actions(path, v)
+        for kind in ("add", "remove", "cdc")
+        if kind in a
+    }
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), path).replace(os.sep, "/")
+        for d, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet") and "_delta_log" not in d
+    }
+    assert on_disk <= referenced, sorted(on_disk - referenced)
+
+
 @MODES
 def test_duplicate_source_keys_rejected(spark, tdir, dv):
     _table(spark, tdir, [(1, "a")])
     with pytest.raises(ValueError, match="duplicate"):
         _merge(spark, tdir, [(2, "x"), (2, "y")], dv)
-    assert deltalite.latest_version(tdir) == 0
+    _assert_refused(tdir, 0)
 
 
 def test_keys_colliding_after_cast_rejected(spark, tdir):
@@ -139,7 +160,70 @@ def test_keys_colliding_after_cast_rejected(spark, tdir):
     _table(spark, tdir, [(5, "a")])
     with pytest.raises(ValueError, match="duplicate"):
         _merge(spark, tdir, [("1", "x"), ("01", "y")], False, "k string, v string")
-    assert deltalite.latest_version(tdir) == 0
+    _assert_refused(tdir, 0)
+
+
+@MODES
+def test_check_violation_rejected(spark, tdir, dv):
+    _table(spark, tdir, [(1, "a")])
+    v = deltalite.add_check_constraint(spark, tdir, "k_small", "k < 100")
+    with pytest.raises(ValueError, match="k_small"):
+        _merge(spark, tdir, [(1, "A"), (500, "x")], dv)
+    _assert_refused(tdir, v)
+
+
+def test_append_only_match_rejected(spark, tdir):
+    _table(spark, tdir, [(1, "a")])
+    v = deltalite.set_table_property(tdir, "delta.appendOnly", "true")
+    with pytest.raises(ValueError, match="appendOnly"):
+        _merge(spark, tdir, [(1, "A")], False)
+    _assert_refused(tdir, v)
+
+
+@MODES
+def test_source_evaluated_once(spark, tdir, dv):
+    """The source plan runs once: the probes, the tag, the data and the
+    change feed all read the rows the merge wrote first."""
+    from pyspark.sql import functions as F
+
+    _table(spark, tdir, [(1, "a"), (2, "b")])
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(v):
+        calls.add(1)
+        return v
+
+    src = _df(spark, [(2, "B"), (5, "e")]).withColumn(
+        "v", F.udf(counted, "string")("v")
+    )
+    v = deltalite.merge(spark, src, tdir, ["k"], deletion_vectors=dv)
+    assert calls.value == 2
+    assert {r.k: r.v for r in deltalite.read(spark, tdir).collect()} == {
+        1: "a", 2: "B", 5: "e"
+    }
+    assert Counter(
+        r._change_type for r in deltalite.read_changes(spark, tdir, v, v).collect()
+    ) == Counter({"update_preimage": 1, "update_postimage": 1, "insert": 1})
+
+
+@MODES
+def test_nondeterministic_source_data_matches_change_feed(spark, tdir, dv):
+    """The committed rows and the change feed come from the same
+    evaluation of the source, so a current_timestamp() column agrees."""
+    from pyspark.sql import functions as F
+
+    ddl = "k int, v string, ts timestamp"
+    deltalite.write(spark, spark.createDataFrame([(1, "a", None)], ddl), tdir)
+    src = _df(spark, [(1, "A"), (2, "b")]).withColumn("ts", F.current_timestamp())
+    v = deltalite.merge(spark, src, tdir, ["k"], deletion_vectors=dv)
+    data = {r.k: r.ts for r in deltalite.read(spark, tdir).collect()}
+    post = {
+        r.k: r.ts
+        for r in deltalite.read_changes(spark, tdir, v, v).collect()
+        if r._change_type in ("insert", "update_postimage")
+    }
+    assert post == data
+    assert None not in post.values()
 
 
 def _dml(spark, path, verb, *args, dv):
