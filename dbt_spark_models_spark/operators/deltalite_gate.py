@@ -395,38 +395,47 @@ def sink_deltalite_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@query(
-    "streaming_deltalite_source_tail",
-    oracle="""
+_ORDERS_BY_PRIORITY = """
 SELECT o_orderpriority,
        COUNT(*) AS n_orders,
        CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
 FROM orders
 GROUP BY o_orderpriority
-""",
-)
-def streaming_deltalite_source_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DeltaLite as a Structured-Streaming SOURCE (Spark 4 Python
-    streaming DataSource API): the commit log IS the stream — offsets are
-    log versions, each micro-batch is exactly the rows the commits in
-    (start, end] added. The table is built as 3 append commits plus one
-    OPTIMIZE compaction; the streamed aggregate must equal the plain
-    batch aggregate of the whole source table, which proves (a) every
-    append surfaced exactly once across micro-batches and (b) the
-    dataChange=false OPTIMIZE commit was invisible to the stream even
-    though it rewrote every file — the property that lets layout
-    maintenance run under live consumers.
+"""
 
-    Scale: this gate uses the driver-side SimpleDataSourceStreamReader
-    (right for metadata-rate tails); the documented production variant is
-    the partitioned reader — one InputPartition per added file, same
-    offsets (`sources/deltalite_stream.py`)."""
+
+def _deltalite_stream(
+    spark: SparkSession, path: str, change_feed: bool = False
+) -> DataFrame:
+    """``spark.readStream`` over the DeltaLite table at ``path``
+    (``sources/deltalite_stream.py``), registering the source once per
+    session."""
     from dbt_spark_models_spark.sources.deltalite_stream import (
         DeltaLiteStreamSource,
     )
+
+    try:
+        spark.dataSource.register(DeltaLiteStreamSource)
+    except Exception:  # noqa: BLE001 — already registered in this session
+        pass
+    return (
+        spark.readStream.format("deltalite_stream")
+        .option("path", path)
+        .option("changeFeed", str(change_feed).lower())
+        .load()
+    )
+
+
+def _stream_orders_tail(spark: SparkSession, sf_dir: str, gate: str) -> DataFrame:
+    """Build orders as 3 append commits plus one OPTIMIZE compaction,
+    then stream the table and aggregate per priority. The streamed
+    aggregate must equal the plain batch aggregate of the whole source
+    table, which proves (a) every append surfaced exactly once across
+    micro-batches and (b) the dataChange=false OPTIMIZE commit was
+    invisible to the stream even though it rewrote every file."""
     from dbt_spark_models_spark.streaming.pipelines import _run_to_memory
 
-    path = _table_dir(sf_dir, "stream_source")
+    path = _table_dir(sf_dir, gate)
     for i in range(3):
         deltalite.write(
             spark,
@@ -436,18 +445,31 @@ def streaming_deltalite_source_tail(spark: SparkSession, sf_dir: str) -> DataFra
         )
     # layout-only rewrite — must NOT reach the stream
     deltalite.optimize(spark, path, n_files=2)
-    try:
-        spark.dataSource.register(DeltaLiteStreamSource)
-    except Exception:  # noqa: BLE001 — already registered in this session
-        pass
-    stream = (
-        spark.readStream.format("deltalite_stream").option("path", path).load()
-    )
-    agg = stream.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum("o_orderkey").alias("key_sum"),
+    agg = (
+        _deltalite_stream(spark, path)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("o_orderkey").alias("key_sum"),
+        )
     )
     return _run_to_memory(agg, "complete")
+
+
+@query("streaming_deltalite_source_tail", oracle=_ORDERS_BY_PRIORITY)
+def streaming_deltalite_source_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DeltaLite as a Structured-Streaming SOURCE (Spark 4 Python
+    streaming DataSource API): the commit log IS the stream — offsets are
+    log versions, each micro-batch is exactly the rows the commits in
+    (start, end] added, and an OPTIMIZE is invisible — the property that
+    lets layout maintenance run under live consumers
+    (``_stream_orders_tail``).
+
+    Scale: ``partitions(start, end)`` plans one InputPartition per added
+    file on the driver (metadata-rate log replay) and ``read(partition)``
+    runs on executors, so a micro-batch scan parallelizes like any
+    parquet read (`sources/deltalite_stream.py`)."""
+    return _stream_orders_tail(spark, sf_dir, "stream_source")
 
 
 @query(
@@ -1065,14 +1087,11 @@ def streaming_deltalite_cdf_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, which proves every change surfaced exactly once with the
     right polarity THROUGH the streaming offsets path.
 
-    This is what the plain streaming source cannot do (it raises on
+    This is what the append-only stream cannot do (it raises on
     rewriting commits): with CDF a downstream streaming consumer follows
     a table through upserts and deletes. Scale: per micro-batch work ∝
-    changed rows in the commit window; the documented production variant
-    is the partitioned reader (one InputPartition per change file)."""
-    from dbt_spark_models_spark.sources.deltalite_stream import (
-        DeltaLiteStreamSource,
-    )
+    changed rows in the commit window, planned as one InputPartition per
+    change file and read on executors."""
     from dbt_spark_models_spark.streaming.pipelines import _run_to_memory
 
     path = _table_dir(sf_dir, "stream_cdf")
@@ -1092,17 +1111,7 @@ def streaming_deltalite_cdf_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     deltalite.merge(spark, src.coalesce(2), path, ["k"])
     cutoff = base.agg(F.max("k")).collect()[0][0] // 2  # 1-row probe
     deltalite.delete(spark, path, [("k", "<=", cutoff)])
-    try:
-        spark.dataSource.register(DeltaLiteStreamSource)
-    except Exception:  # noqa: BLE001 — already registered in this session
-        pass
-    stream = (
-        spark.readStream.format("deltalite_stream")
-        .option("path", path)
-        .option("changeFeed", "true")
-        .load()
-    )
-    signed = stream.select(
+    signed = _deltalite_stream(spark, path, change_feed=True).select(
         "pri",
         "k",
         "price",
@@ -1124,59 +1133,13 @@ def streaming_deltalite_cdf_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg, "complete").filter(F.col("n_orders") > 0)
 
 
-@query(
-    "streaming_deltalite_partitioned_tail",
-    oracle="""
-SELECT o_orderpriority,
-       COUNT(*) AS n_orders,
-       CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
-FROM orders
-GROUP BY o_orderpriority
-""",
-)
+@query("streaming_deltalite_partitioned_tail", oracle=_ORDERS_BY_PRIORITY)
 def streaming_deltalite_partitioned_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PARTITIONED streaming reader (``deltalite_stream_dist``,
-    Spark 4 ``DataSourceStreamReader``): same log-version offsets as the
-    Simple reader, but ``partitions(start, end)`` plans one
-    InputPartition per committed file and ``read(partition)`` executes on
-    EXECUTORS — the micro-batch scan parallelizes like any parquet read
-    while planning stays metadata-rate on the driver. The table is built
-    as 3 append commits plus an OPTIMIZE (invisible, dataChange=false);
-    the streamed aggregate must equal the batch aggregate of the whole
-    source table — every file surfaced exactly once, through the
-    executor-parallel path.
-
-    This is the 100 TB shape the Simple reader's gate
-    (``streaming_deltalite_source_tail``) documents as the production
-    variant; both are now driver-graded."""
-    from dbt_spark_models_spark.sources.deltalite_stream import (
-        DeltaLiteDistStreamSource,
-    )
-    from dbt_spark_models_spark.streaming.pipelines import _run_to_memory
-
-    path = _table_dir(sf_dir, "stream_dist")
-    for i in range(3):
-        deltalite.write(
-            spark,
-            _orders_slice(spark, sf_dir, i).coalesce(2),
-            path,
-            "overwrite" if i == 0 else "append",
-        )
-    deltalite.optimize(spark, path, n_files=2)
-    try:
-        spark.dataSource.register(DeltaLiteDistStreamSource)
-    except Exception:  # noqa: BLE001 — already registered in this session
-        pass
-    stream = (
-        spark.readStream.format("deltalite_stream_dist")
-        .option("path", path)
-        .load()
-    )
-    agg = stream.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum("o_orderkey").alias("key_sum"),
-    )
-    return _run_to_memory(agg, "complete")
+    """The same streaming tail as ``streaming_deltalite_source_tail`` in
+    its own table dir: the registry keeps both names, and both read
+    through the one partitioned reader (one InputPartition per committed
+    file, read on executors) — every file surfaced exactly once."""
+    return _stream_orders_tail(spark, sf_dir, "stream_dist")
 
 
 @query(

@@ -68,25 +68,20 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "dbt_spark_models_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
     On a real cluster, ``master`` comes from spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS or *]``. ``shuffle_partitions``
-    should be ~2-3x total cores on a cluster; locally = cores.
+    default to ``local[$SPARK_GRAFT_CPUS or *]``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 1)
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -11,9 +11,11 @@ log versions, so:
 - ``dataChange: false`` commits (OPTIMIZE's compaction rewrites) are
   SKIPPED: layout maintenance is invisible to downstream consumers,
   exactly like real Delta's streaming source;
-- recovery replays ``readBetweenOffsets(start, end)`` from the log —
-  offsets are durable in the query checkpoint, data is durable in the
-  table, so a restarted query resumes without loss or duplication.
+- recovery replays ``partitions(start, end)`` from the log — offsets are
+  durable in the query checkpoint, data is durable in the table, so a
+  restarted query resumes without loss or duplication;
+- a range whose commits were retention-cleaned (``cleanup_expired_logs``)
+  raises instead of streaming only the survivors.
 
 Contract: append-style commits only (the default contract of Delta's own
 streaming source). A commit that REMOVES files with ``dataChange: true``
@@ -22,21 +24,17 @@ from a stream — unless the caller opts into CDC semantics with
 ``.option("changeFeed", "true")`` (Delta's ``readChangeFeed``): then every
 commit streams its CHANGES — ``_change_data`` files where the commit wrote
 them (MERGE/DELETE pre/post-images and deletes), derived inserts/deletes
-from dataChange adds/removes otherwise — with ``_change_type`` and
+from dataChange adds/removes otherwise (``deltalite._data_changes``, the
+batch ``read_changes`` rule) — with ``_change_type`` and
 ``_commit_version`` columns appended, and a downstream signed aggregate
 can maintain exact state through rewrites (see
 ``streaming_deltalite_cdf_tail``).
 
-Two readers, same offsets and options:
-
-- ``deltalite_stream`` — ``SimpleDataSourceStreamReader``, reads files on
-  the driver; right for metadata-rate tails and tests.
-- ``deltalite_stream_dist`` — the production path: a partitioned
-  ``DataSourceStreamReader`` whose ``partitions(start, end)`` returns one
-  InputPartition per data/CDC file (planning is log replay, metadata-rate)
-  and whose ``read(partition)`` runs ON EXECUTORS, so a micro-batch
-  parallelizes like any parquet scan — the shape real Delta's streaming
-  source uses at 100 TB.
+One reader, ``deltalite_stream``: a partitioned ``DataSourceStreamReader``
+whose ``partitions(start, end)`` returns one InputPartition per data/CDC
+file (planning is log replay, metadata-rate, on the driver) and whose
+``read(partition)`` runs ON EXECUTORS, so a micro-batch parallelizes like
+any parquet scan — the shape real Delta's streaming source uses at 100 TB.
 """
 
 from __future__ import annotations
@@ -48,7 +46,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 from dbt_spark_models_spark.sources import deltalite
@@ -68,53 +65,34 @@ def _dead_row_indexes(table_path: str, dv_path, rel_path: str):
     return set(t.filter(mask).column("row_index").to_pylist())
 
 
-def _derived_change_files(
-    table_path: str, actions: list[dict], v: int, pre_active: dict | None = None
-):
-    """The spec's DV-aware derived-CDF contract, shared by both stream
-    readers and mirroring batch ``read_changes``: for a commit with no
-    cdc actions, pair each dataChange remove/add with the deletionVector
-    it must be read through (removes: the DV carried in the PARENT
-    snapshot; adds: the add's own DV), and skip remove+re-add pairs of
-    the same path whose tombstone cardinality is unchanged (tombstone
-    sets only grow, so equal cardinality = pure repoint = no content
-    change). Returns (removes, adds) as lists of (rel_path,
-    dv_path | None).
+class DeltaLiteFilePartition(InputPartition):
+    """One data file of one commit: everything an executor needs to emit
+    its rows without touching the log (small, picklable metadata)."""
 
-    ``pre_active`` is the parent snapshot's ``{path: add}`` state; pass
-    it from ``deltalite._walk_commits`` when iterating a version range —
-    the fallback ``_replay_state(v - 1)`` is O(log size) PER COMMIT and
-    makes a tail walk O(V²) (r6 ADVICE #5)."""
-    removes = [
-        a["remove"]["path"]
-        for a in actions
-        if "remove" in a and a["remove"].get("dataChange", True)
-    ]
-    add_map = {
-        a["add"]["path"]: a["add"]
-        for a in actions
-        if "add" in a and a["add"].get("dataChange", True)
-    }
-    if pre_active is None:
-        pre_active = (
-            deltalite._replay_state(table_path, v - 1)["active"]
-            if removes and v > 0
-            else {}
-        )
-
-    def dv(payload):
-        return ((payload or {}).get("deletionVector") or {})
-
-    for p in sorted(set(removes) & set(add_map)):
-        if dv(pre_active.get(p)).get("cardinality", 0) == dv(
-            add_map[p]
-        ).get("cardinality", 0):
-            removes.remove(p)
-            del add_map[p]
-    return (
-        [(p, dv(pre_active.get(p)).get("path")) for p in removes],
-        [(p, dv(a).get("path")) for p, a in add_map.items()],
-    )
+    def __init__(
+        self,
+        table_path: str,
+        payload: dict,
+        fields: list,
+        pcols: list,
+        mapping: dict,
+        change_type: str | None,
+        version: int,
+        cdc: bool = False,
+    ):
+        self.table_path = table_path
+        self.rel_path = payload["path"]
+        # the file's own deletionVector sidecar (removes: the one it
+        # carried in the PARENT snapshot), and its hive partition values
+        # as the log records them
+        self.dv_path = (payload.get("deletionVector") or {}).get("path")
+        self.partition_values = payload.get("partitionValues") or {}
+        self.fields = fields
+        self.pcols = pcols
+        self.mapping = mapping
+        self.change_type = change_type
+        self.version = version
+        self.cdc = cdc
 
 
 class DeltaLiteStreamSource(DataSource):
@@ -140,14 +118,11 @@ class DeltaLiteStreamSource(DataSource):
             )
         return base
 
-    def simpleStreamReader(self, schema) -> "DeltaLiteStreamReader":
+    def streamReader(self, schema) -> "DeltaLiteStreamReader":
         return DeltaLiteStreamReader(self.options)
-    # streamReader deliberately NOT overridden: the base class's default
-    # NotImplementedError is the signal Spark uses to fall back to
-    # simpleStreamReader
 
 
-class DeltaLiteStreamReader(SimpleDataSourceStreamReader):
+class DeltaLiteStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         self.path = options["path"]
         self.change_feed = options.get("changeFeed", "false").lower() == "true"
@@ -155,252 +130,15 @@ class DeltaLiteStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"version": -1}  # start of log: replay everything
 
-    def _rows_for_versions(self, start_v: int, end_v: int):
-        """Rows added by commits in (start_v, end_v], skipping
-        dataChange=false (layout-only) commits; raises on data-changing
-        removes (not an append stream)."""
-        import pyarrow.parquet as pq
-
-        state = deltalite._replay_state(self.path)
-        deltalite._assert_readable(state.get("protocol"), self.path)
-        meta = state["meta"]
-        fields = [
-            (f["name"], f["type"] if isinstance(f["type"], str) else "struct")
-            for f in json.loads(meta["schemaString"])["fields"]
-        ]
-        pcols = set(meta.get("partitionColumns", []))
-        mapping = deltalite._column_mapping(meta)  # logical → physical
-        versions = [
-            v for v in deltalite._list_versions(self.path) if start_v < v <= end_v
-        ]
-        for v in versions:
-            adds, removes_changed = [], False
-            with open(deltalite._version_file(self.path, v)) as f:
-                for line in f:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    action = json.loads(line)
-                    if "add" in action and action["add"].get("dataChange", True):
-                        adds.append(action["add"])
-                    elif "remove" in action and action["remove"].get(
-                        "dataChange", True
-                    ):
-                        removes_changed = True
-            if removes_changed:
-                raise ValueError(
-                    f"commit {v} rewrites data (overwrite/merge/delete); the "
-                    "deltalite_stream source reads append-style commits only"
-                )
-            for add in adds:
-                table = pq.read_table(os.path.join(self.path, add["path"]))
-                # read through the add's own deletionVector (r6 ADVICE #3):
-                # a shallow clone of a DV table is an adds-only commit whose
-                # files carry DVs — raw reads would resurrect tombstones
-                dead = _dead_row_indexes(
-                    self.path,
-                    (add.get("deletionVector") or {}).get("path"),
-                    add["path"],
-                )
-                if dead:
-                    table = table.take(
-                        [i for i in range(table.num_rows) if i not in dead]
-                    )
-                cols = {c: table.column(c).to_pylist() for c in table.column_names}
-                n = table.num_rows
-                pv = add.get("partitionValues") or {}
-                # hive-partitioned tables keep partition columns in the
-                # LOG, not the files — rebuild each row in schema order,
-                # coercing the partitionValues strings per the schema type
-                out = []
-                for name, tname in fields:
-                    if name in pcols:
-                        val = deltalite.coerce_partition_value(
-                            pv.get(name), tname
-                        )
-                        out.append([val] * n)
-                    else:
-                        # files store PHYSICAL names (column mapping);
-                        # pre-schema-evolution files lack late columns:
-                        # null-fill, same as the batch reader
-                        out.append(cols.get(mapping.get(name, name), [None] * n))
-                yield from (tuple(r) for r in zip(*out))
-
-    def _file_rows(self, rel_path: str, fields, pcols, mapping, dv_path=None):
-        """One data file's rows in logical-schema order: physical-name
-        mapping, null-fill for pre-evolution files, partition columns
-        re-derived from the hive path segments. ``dv_path`` (the file's
-        deletionVector sidecar, if it carried one in the snapshot being
-        derived) filters its tombstoned row indices away — reading a DV
-        file RAW would resurrect deleted rows into the change feed."""
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(os.path.join(self.path, rel_path))
-        dead = _dead_row_indexes(self.path, dv_path, rel_path)
-        if dead:
-            table = table.take(
-                [i for i in range(table.num_rows) if i not in dead]
-            )
-        cols = {c: table.column(c).to_pylist() for c in table.column_names}
-        n = table.num_rows
-        pv: dict[str, str | None] = {}
-        for seg in rel_path.split("/")[:-1]:
-            if "=" in seg:
-                k, v = deltalite._decode_partition_dir(seg)
-                pv[k] = v
-        out = []
-        for name, tname in fields:
-            if name in pcols:
-                out.append(
-                    [deltalite.coerce_partition_value(pv.get(name), tname)] * n
-                )
-            else:
-                out.append(cols.get(mapping.get(name, name), [None] * n))
-        return out, n
-
-    def _rows_changes(self, start_v: int, end_v: int):
-        """Change-feed rows for commits in (start_v, end_v]: the spec's
-        reader contract — cdc files where present, derived insert/delete
-        from dataChange adds/removes otherwise, dataChange=false commits
-        skipped. Each row gains (_change_type, _commit_version)."""
-        import pyarrow.parquet as pq
-
-        state = deltalite._replay_state(self.path)
-        deltalite._assert_readable(state.get("protocol"), self.path)
-        meta = state["meta"]
-        fields = [
-            (f["name"], f["type"] if isinstance(f["type"], str) else "struct")
-            for f in json.loads(meta["schemaString"])["fields"]
-        ]
-        pcols = set(meta.get("partitionColumns", []))
-        mapping = deltalite._column_mapping(meta)
-        # one forward fold of the log for the whole batch (r6 ADVICE #5)
-        for v, actions, parent_active in deltalite._walk_commits(
-            self.path, start_v + 1, end_v
-        ):
-            cdc = [a["cdc"]["path"] for a in actions if "cdc" in a]
-            if cdc:
-                # cdc files carry logical names + _change_type already
-                for path in cdc:
-                    table = pq.read_table(os.path.join(self.path, path))
-                    cols = {
-                        c: table.column(c).to_pylist()
-                        for c in table.column_names
-                    }
-                    n = table.num_rows
-                    # cdc files carry PHYSICAL names (rename-stable)
-                    out = [
-                        cols.get(mapping.get(name, name), [None] * n)
-                        for name, _ in fields
-                    ]
-                    out.append(cols[deltalite.CHANGE_TYPE_COL])
-                    out.append([v] * n)
-                    yield from (tuple(r) for r in zip(*out))
-                continue
-            removes, adds = _derived_change_files(
-                self.path, actions, v, parent_active
-            )
-            for pairs, ctype in ((removes, "delete"), (adds, "insert")):
-                for path, dv_path in pairs:
-                    out, n = self._file_rows(
-                        path, fields, pcols, mapping, dv_path
-                    )
-                    out.append([ctype] * n)
-                    out.append([v] * n)
-                    yield from (tuple(r) for r in zip(*out))
-
-    def read(self, start: dict):
-        latest = deltalite.latest_version(self.path)
-        end_v = latest if latest is not None else -1
-        start_v = int(start["version"])
-        if end_v <= start_v:
-            return iter(()), start
-        gen = (
-            self._rows_changes(start_v, end_v)
-            if self.change_feed
-            else self._rows_for_versions(start_v, end_v)
-        )
-        return iter(list(gen)), {"version": end_v}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        fn = self._rows_changes if self.change_feed else self._rows_for_versions
-        return fn(int(start["version"]), int(end["version"]))
-
-    def commit(self, end: dict) -> None:
-        # offsets live in the query checkpoint; the log itself keeps all
-        # versions (no retention in this subset), so nothing to release
-        pass
-
-
-# --------------------------------------------------------------------------
-# Partitioned (executor-parallel) streaming reader — the production path
-# the Simple reader's docstring defers to: one InputPartition per data
-# file, so a micro-batch parallelizes like any parquet scan.
-
-
-class DeltaLiteFilePartition(InputPartition):
-    """One data file of one commit: everything an executor needs to emit
-    its rows without touching the log (small, picklable metadata)."""
-
-    def __init__(
-        self,
-        table_path: str,
-        rel_path: str,
-        fields: list,
-        pcols: list,
-        mapping: dict,
-        change_type: str | None,
-        version: int,
-        cdc: bool,
-        dv_path: str | None = None,
-    ):
-        self.table_path = table_path
-        self.rel_path = rel_path
-        self.fields = fields
-        self.pcols = pcols
-        self.mapping = mapping
-        self.change_type = change_type
-        self.version = version
-        self.cdc = cdc
-        self.dv_path = dv_path
-
-
-class DeltaLiteDistStreamSource(DataSource):
-    """``spark.readStream.format("deltalite_stream_dist")`` — same offsets
-    and options as ``deltalite_stream`` (incl. ``changeFeed``), but the
-    files of each micro-batch are read BY EXECUTORS, one InputPartition
-    per file: planning stays metadata-rate on the driver (log replay
-    only), scan bandwidth scales with the cluster. This is the reader
-    shape real Delta's streaming source uses at 100 TB."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "deltalite_stream_dist"
-
-    def schema(self):
-        return DeltaLiteStreamSource(self.options).schema()
-
-    def streamReader(self, schema) -> "DeltaLiteDistStreamReader":
-        return DeltaLiteDistStreamReader(self.options)
-
-
-class DeltaLiteDistStreamReader(DataSourceStreamReader):
-    def __init__(self, options):
-        self.path = options["path"]
-        self.change_feed = options.get("changeFeed", "false").lower() == "true"
-
-    def initialOffset(self) -> dict:
-        return {"version": -1}
-
     def latestOffset(self) -> dict:
         latest = deltalite.latest_version(self.path)
         return {"version": latest if latest is not None else -1}
 
     def partitions(self, start: dict, end: dict):
         """Driver-side planning: replay the log tail for (start, end] and
-        emit one partition per file — adds (and in changeFeed mode cdc
-        files / dataChange removes) with the schema metadata snapshotted
-        so executors never read the log."""
+        emit one partition per file — dataChange adds (and in changeFeed
+        mode cdc files / derived removes) with the schema metadata
+        snapshotted so executors never read the log."""
         state = deltalite._replay_state(self.path)
         deltalite._assert_readable(state.get("protocol"), self.path)
         meta = state["meta"]
@@ -410,71 +148,48 @@ class DeltaLiteDistStreamReader(DataSourceStreamReader):
         ]
         pcols = list(meta.get("partitionColumns", []))
         mapping = deltalite._column_mapping(meta)
-        start_v, end_v = int(start["version"]), int(end["version"])
         parts: list[DeltaLiteFilePartition] = []
 
-        def part(rel, ctype, v, cdc=False, dv_path=None):
+        def part(payload, ctype, v, cdc=False):
             return DeltaLiteFilePartition(
-                self.path, rel, fields, pcols, mapping, ctype, v, cdc, dv_path
+                self.path, payload, fields, pcols, mapping, ctype, v, cdc
             )
 
-        # one forward fold of the log for the whole batch (r6 ADVICE #5)
+        # one forward fold of the log for the whole batch (r6 ADVICE #5);
+        # the walker raises on a retention-cleaned range
         for v, actions, parent_active in deltalite._walk_commits(
-            self.path, start_v + 1, end_v
+            self.path, int(start["version"]) + 1, int(end["version"])
         ):
-            adds = [
-                a["add"]
+            cdc = [a["cdc"] for a in actions if "cdc" in a]
+            if self.change_feed and cdc:
+                parts += [part(c, None, v, cdc=True) for c in cdc]
+                continue
+            if not self.change_feed and any(
+                a["remove"].get("dataChange", True)
                 for a in actions
-                if "add" in a and a["add"].get("dataChange", True)
-            ]
-            removes = [
-                a["remove"]["path"]
-                for a in actions
-                if "remove" in a and a["remove"].get("dataChange", True)
-            ]
-            cdc = [a["cdc"]["path"] for a in actions if "cdc" in a]
-            if not self.change_feed:
-                if removes:
-                    raise ValueError(
-                        f"commit {v} rewrites data (overwrite/merge/delete); "
-                        "use .option('changeFeed', 'true') to stream changes"
-                    )
-                # each add is read through its OWN deletionVector (r6
-                # ADVICE #3): a shallow clone of a DV table commits adds
-                # that carry DVs with no removes, so the removes guard
-                # never fires — reading those files raw would resurrect
-                # tombstoned rows
-                parts += [
-                    part(
-                        a["path"],
-                        None,
-                        v,
-                        dv_path=(a.get("deletionVector") or {}).get("path"),
-                    )
-                    for a in adds
-                ]
-            elif cdc:
-                parts += [part(p, None, v, cdc=True) for p in cdc]
-            else:
-                # DV-aware derived changes (shared contract with the
-                # Simple reader and batch read_changes): planning stays
-                # on the driver, each partition ships its file's
-                # sidecar pointer so the EXECUTOR applies the tombstones
-                rm_pairs, add_pairs = _derived_change_files(
-                    self.path, actions, v, parent_active
+                if "remove" in a
+            ):
+                raise ValueError(
+                    f"commit {v} rewrites data (overwrite/merge/delete); the "
+                    "deltalite_stream source reads append-style commits only "
+                    "— use .option('changeFeed', 'true') to stream changes"
                 )
-                parts += [
-                    part(p, "delete", v, dv_path=d) for p, d in rm_pairs
-                ]
-                parts += [
-                    part(p, "insert", v, dv_path=d) for p, d in add_pairs
-                ]
+            # each file is read through its deletionVector: a shallow
+            # clone of a DV table commits adds that carry DVs with no
+            # removes (r6 ADVICE #3), and a removed DV file's dead rows
+            # are no delete — reading either raw resurrects tombstones
+            removes, adds = deltalite._data_changes(actions, parent_active)
+            if self.change_feed:
+                parts += [part(p, "delete", v) for p in removes.values()]
+                parts += [part(p, "insert", v) for p in adds.values()]
+            else:
+                parts += [part(p, None, v) for p in adds.values()]
         return parts
 
     def read(self, partition: "DeltaLiteFilePartition"):
         """Executor-side: one file → its rows in logical-schema order
-        (physical-name mapping, hive partition reconstruction from the
-        path, null-fill for pre-evolution files)."""
+        (physical-name mapping, hive partition columns from the log's
+        partitionValues, null-fill for pre-evolution files)."""
         import pyarrow.parquet as pq
 
         p = partition
@@ -495,18 +210,13 @@ class DeltaLiteDistStreamReader(DataSourceStreamReader):
             out.append(cols[deltalite.CHANGE_TYPE_COL])
             out.append([p.version] * n)
             return iter(tuple(r) for r in zip(*out))
-        pv: dict[str, str | None] = {}
-        for seg in p.rel_path.split("/")[:-1]:
-            if "=" in seg:
-                k, v = deltalite._decode_partition_dir(seg)
-                pv[k] = v
-        pset = set(p.pcols)
         out = []
         for name, tname in p.fields:
-            if name in pset:
-                out.append(
-                    [deltalite.coerce_partition_value(pv.get(name), tname)] * n
+            if name in p.pcols:
+                val = deltalite.coerce_partition_value(
+                    p.partition_values.get(name), tname
                 )
+                out.append([val] * n)
             else:
                 out.append(cols.get(p.mapping.get(name, name), [None] * n))
         if p.change_type is not None:
@@ -515,4 +225,7 @@ class DeltaLiteDistStreamReader(DataSourceStreamReader):
         return iter(tuple(r) for r in zip(*out))
 
     def commit(self, end: dict) -> None:
+        # offsets live in the query checkpoint; the log is only pruned
+        # by cleanup_expired_logs, which a later read reports, so
+        # nothing to release
         pass

@@ -17,7 +17,6 @@ def spark():
     # locations left by a previous JVM, so never reuse one
     s = get_spark(
         "tests",
-        shuffle_partitions=8,
         extra_conf={"spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="spark-wh-")},
     )
     yield s

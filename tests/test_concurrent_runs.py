@@ -130,7 +130,7 @@ sys.path.insert(0, {repo!r})
 from dbt_spark_models_spark.session import get_spark
 from dbt_spark_models_spark.operators.engine_gate import _shared_mini_mart
 import tempfile
-spark = get_spark("conc-child", shuffle_partitions=4,
+spark = get_spark("conc-child",
                   extra_conf={{"spark.sql.warehouse.dir":
                                tempfile.mkdtemp(prefix="wh-conc-")}})
 db = _shared_mini_mart(spark, {sf!r})

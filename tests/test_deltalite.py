@@ -251,65 +251,6 @@ def test_delete_keeps_null_predicate_rows(spark, tdir):
     assert got == {"n"}  # NULL k does not match the predicate → kept
 
 
-def _run_stream_batch(spark, tdir, ckpt, out_rows):
-    """Drive the deltalite_stream source over all available commits via
-    foreachBatch, accumulating rows into out_rows."""
-    from dbt_spark_models_spark.sources.deltalite_stream import (
-        DeltaLiteStreamSource,
-    )
-
-    try:
-        spark.dataSource.register(DeltaLiteStreamSource)
-    except Exception:  # noqa: BLE001
-        pass
-    stream = spark.readStream.format("deltalite_stream").option("path", tdir).load()
-
-    def _sink(df, _bid):
-        out_rows.extend((r.k, r.v) for r in df.collect())
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def test_stream_source_resumes_from_checkpoint(spark, tdir):
-    """Offsets are log versions persisted in the query checkpoint: a
-    restarted query emits ONLY commits made since the last run."""
-    import tempfile as _tf
-
-    deltalite.write(spark, _df(spark, [(1, "a")]).coalesce(1), tdir)
-    deltalite.write(spark, _df(spark, [(2, "b")]).coalesce(1), tdir, "append")
-    ckpt = _tf.mkdtemp(prefix="dlstream-ckpt-")
-    got: list = []
-    _run_stream_batch(spark, tdir, ckpt, got)
-    assert sorted(got) == [(1, "a"), (2, "b")]
-    # restart after two more commits (and an invisible OPTIMIZE)
-    deltalite.write(spark, _df(spark, [(3, "c")]).coalesce(1), tdir, "append")
-    deltalite.optimize(spark, tdir, n_files=1)
-    deltalite.write(spark, _df(spark, [(4, "d")]).coalesce(1), tdir, "append")
-    got2: list = []
-    _run_stream_batch(spark, tdir, ckpt, got2)
-    assert sorted(got2) == [(3, "c"), (4, "d")]  # no re-emission, no optimize rows
-
-
-def test_stream_source_rejects_data_rewrite(spark, tdir):
-    import tempfile as _tf
-
-    deltalite.write(spark, _df(spark, [(1, "a")]).coalesce(1), tdir)
-    deltalite.write(spark, _df(spark, [(2, "b")]).coalesce(1), tdir, "overwrite")
-    got: list = []
-    with pytest.raises(Exception, match="append-style|STREAM_FAILED|rewrites"):
-        _run_stream_batch(
-            spark, tdir, _tf.mkdtemp(prefix="dlstream-ckpt-"), got
-        )
-
-
 def test_schema_evolution_append_new_column(spark, tdir):
     """Appending a batch with an extra column evolves the table schema
     (latest commit's metaData wins): old files null-fill the new column,
@@ -429,21 +370,6 @@ def test_partitioned_append_delete_vacuum(spark, tdir):
     # vacuum walks partition subdirectories
     removed = deltalite.vacuum(tdir, retain_versions=0)
     assert len(removed) == 1 and removed[0].startswith("day=d2/")
-
-
-def test_partitioned_stream_source_rebuilds_partition_column(spark, tdir):
-    from dbt_spark_models_spark.sources.deltalite_stream import (
-        DeltaLiteStreamReader,
-    )
-
-    deltalite.write(
-        spark,
-        _pdf(spark, [(1, "a", "d1"), (2, "b", "d2")]).repartition("day"),
-        tdir,
-        partition_by=["day"],
-    )
-    rows = sorted(DeltaLiteStreamReader({"path": tdir})._rows_for_versions(-1, 0))
-    assert rows == [(1, "a", "d1"), (2, "b", "d2")]
 
 
 def test_rename_column_metadata_only(spark, tdir):
@@ -790,150 +716,6 @@ def test_restore_after_vacuum_raises(spark, tdir):
     deltalite.vacuum(tdir, retain_versions=0)  # drops v0/v1-only files
     with pytest.raises(FileNotFoundError, match="vacuumed"):
         deltalite.restore(spark, tdir, 0)
-
-
-def _run_cdf_stream_batch(spark, tdir, ckpt, out_rows):
-    from dbt_spark_models_spark.sources.deltalite_stream import (
-        DeltaLiteStreamSource,
-    )
-
-    try:
-        spark.dataSource.register(DeltaLiteStreamSource)
-    except Exception:  # noqa: BLE001
-        pass
-    stream = (
-        spark.readStream.format("deltalite_stream")
-        .option("path", tdir)
-        .option("changeFeed", "true")
-        .load()
-    )
-
-    def _sink(df, _bid):
-        out_rows.extend(
-            (r._commit_version, r._change_type, r.k, r.v) for r in df.collect()
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def test_stream_cdf_follows_rewrites_and_resumes(spark, tdir):
-    """changeFeed mode streams THROUGH merge/delete (the plain source
-    raises): updates as pre/post pairs, deletes as deletes; a restart
-    from the checkpoint emits only commits since the last run."""
-    import tempfile as _tf
-
-    deltalite.write(spark, _df(spark, [(1, "a"), (2, "b")]).coalesce(1), tdir)
-    deltalite.merge(spark, _df(spark, [(2, "B"), (3, "c")]).coalesce(1), tdir, ["k"])
-    ckpt = _tf.mkdtemp(prefix="dlcdf-ckpt-")
-    got: list = []
-    _run_cdf_stream_batch(spark, tdir, ckpt, got)
-    assert sorted(got) == [
-        (0, "insert", 1, "a"),
-        (0, "insert", 2, "b"),
-        (1, "insert", 3, "c"),
-        (1, "update_postimage", 2, "B"),
-        (1, "update_preimage", 2, "b"),
-    ]
-    # restart after a delete and an invisible OPTIMIZE
-    deltalite.delete(spark, tdir, [("k", "=", 1)])
-    deltalite.optimize(spark, tdir, n_files=1)
-    got2: list = []
-    _run_cdf_stream_batch(spark, tdir, ckpt, got2)
-    assert sorted(got2) == [(2, "delete", 1, "a")]
-
-
-def _run_dist_stream_batch(spark, tdir, ckpt, out_rows, change_feed=False):
-    from dbt_spark_models_spark.sources.deltalite_stream import (
-        DeltaLiteDistStreamSource,
-    )
-
-    try:
-        spark.dataSource.register(DeltaLiteDistStreamSource)
-    except Exception:  # noqa: BLE001
-        pass
-    reader = (
-        spark.readStream.format("deltalite_stream_dist").option("path", tdir)
-    )
-    if change_feed:
-        reader = reader.option("changeFeed", "true")
-    stream = reader.load()
-
-    def _sink(df, _bid):
-        if change_feed:
-            out_rows.extend(
-                (r._commit_version, r._change_type, r.k, r.v)
-                for r in df.collect()
-            )
-        else:
-            out_rows.extend((r.k, r.v) for r in df.collect())
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def test_dist_stream_reader_parallel_files(spark, tdir):
-    """The partitioned reader (one InputPartition per file, executor-side
-    reads) emits the same rows as the Simple reader and resumes from its
-    checkpoint emitting only new commits."""
-    import tempfile as _tf
-
-    deltalite.write(spark, _df(spark, [(1, "a"), (2, "b")]).coalesce(2), tdir)
-    deltalite.write(spark, _df(spark, [(3, "c")]).coalesce(1), tdir, "append")
-    ckpt = _tf.mkdtemp(prefix="dldist-ckpt-")
-    got: list = []
-    _run_dist_stream_batch(spark, tdir, ckpt, got)
-    assert sorted(got) == [(1, "a"), (2, "b"), (3, "c")]
-    deltalite.optimize(spark, tdir, n_files=1)
-    deltalite.write(spark, _df(spark, [(4, "d")]).coalesce(1), tdir, "append")
-    got2: list = []
-    _run_dist_stream_batch(spark, tdir, ckpt, got2)
-    assert sorted(got2) == [(4, "d")]
-
-
-def test_dist_stream_reader_change_feed(spark, tdir):
-    import tempfile as _tf
-
-    deltalite.write(spark, _df(spark, [(1, "a"), (2, "b")]).coalesce(1), tdir)
-    deltalite.merge(spark, _df(spark, [(2, "B"), (3, "c")]).coalesce(1), tdir, ["k"])
-    deltalite.delete(spark, tdir, [("k", "=", 1)])
-    got: list = []
-    _run_dist_stream_batch(
-        spark, tdir, _tf.mkdtemp(prefix="dldist-ckpt-"), got, change_feed=True
-    )
-    assert sorted(got) == [
-        (0, "insert", 1, "a"),
-        (0, "insert", 2, "b"),
-        (1, "insert", 3, "c"),
-        (1, "update_postimage", 2, "B"),
-        (1, "update_preimage", 2, "b"),
-        (2, "delete", 1, "a"),
-    ]
-
-
-def test_dist_stream_reader_rejects_rewrite_without_cdf(spark, tdir):
-    import tempfile as _tf
-
-    deltalite.write(spark, _df(spark, [(1, "a")]).coalesce(1), tdir)
-    deltalite.write(spark, _df(spark, [(2, "b")]).coalesce(1), tdir, "overwrite")
-    with pytest.raises(Exception, match="changeFeed|STREAM_FAILED|rewrites"):
-        _run_dist_stream_batch(
-            spark, tdir, _tf.mkdtemp(prefix="dldist-ckpt-"), []
-        )
 
 
 def test_change_feed_after_column_rename(spark, tdir):
@@ -1415,36 +1197,6 @@ def test_check_constraints_enforced_on_every_writer(spark, tdir):
         deltalite.drop_check_constraint(tdir, "nope")
 
 
-def test_stream_cdf_follows_deletion_vectors(spark, tdir):
-    """The changeFeed stream tails DV commits exactly like COW ones —
-    merge-on-read is invisible to CDF consumers: the cdc rows are
-    authoritative and the re-pointed adds contribute nothing."""
-    import tempfile as _tf
-
-    deltalite.write(
-        spark, _df(spark, [(1, "a"), (2, "b"), (3, "c")]).coalesce(1), tdir
-    )
-    ckpt = _tf.mkdtemp(prefix="dlcdfdv-ckpt-")
-    got: list = []
-    _run_cdf_stream_batch(spark, tdir, ckpt, got)
-    assert sorted(got) == [
-        (0, "insert", 1, "a"), (0, "insert", 2, "b"), (0, "insert", 3, "c")
-    ]
-    deltalite.delete(spark, tdir, [("k", "=", 2)], deletion_vectors=True)
-    deltalite.merge(
-        spark, _df(spark, [(3, "C"), (4, "d")]).coalesce(1), tdir, ["k"],
-        deletion_vectors=True,
-    )
-    got2: list = []
-    _run_cdf_stream_batch(spark, tdir, ckpt, got2)
-    assert sorted(got2) == [
-        (1, "delete", 2, "b"),
-        (2, "insert", 4, "d"),
-        (2, "update_postimage", 3, "C"),
-        (2, "update_preimage", 3, "c"),
-    ]
-
-
 def test_clone_of_clone_keeps_original_pointers(spark, tdir):
     """A clone of a clone re-adds the ORIGINAL absolute pointers (no
     chain of indirection): removing the intermediate clone's log leaves
@@ -1717,32 +1469,6 @@ def test_cdf_derived_path_honors_deletion_vectors(spark, tdir):
     inserts = {r.k for r in feed if r._change_type == "insert"}
     assert deletes == {2, 3, 4, 5}, "tombstoned rows must not resurrect"
     assert inserts == {9}
-
-
-def test_stream_cdf_derived_path_honors_deletion_vectors(spark, tdir):
-    """Both streaming readers share the batch derived-CDF contract: a
-    zero-match DV repoint commit streams nothing and an overwrite of a
-    DV table streams only live rows as deletes."""
-    import tempfile as _tf
-
-    deltalite.write(
-        spark, _df(spark, [(i, f"v{i}") for i in range(4)]).coalesce(1), tdir
-    )
-    deltalite.delete(spark, tdir, [("k", "=", 0)], deletion_vectors=True)
-    ckpt = _tf.mkdtemp(prefix="dlcdfdv2-ckpt-")
-    got: list = []
-    _run_cdf_stream_batch(spark, tdir, ckpt, got)  # consume v0..v1
-    # zero-match repoint (grazes stats, k=0 already dead) then overwrite
-    deltalite.delete(spark, tdir, [("k", "=", 0)], deletion_vectors=True)
-    v3 = deltalite.write(spark, _df(spark, [(7, "w")]).coalesce(1), tdir)
-    got2: list = []
-    _run_cdf_stream_batch(spark, tdir, ckpt, got2)
-    assert sorted(got2) == [
-        (v3, "delete", 1, "v1"),
-        (v3, "delete", 2, "v2"),
-        (v3, "delete", 3, "v3"),
-        (v3, "insert", 7, "w"),
-    ]
 
 
 def test_append_only_table_property(spark, tdir):

@@ -232,7 +232,7 @@ sys.path.insert(0, {repo!r} + "/tests")
 import tempfile
 from dbt_spark_models_spark.session import get_spark
 import test_deltalite_multiwriter as mw
-spark = get_spark("dlmw-child", shuffle_partitions=2,
+spark = get_spark("dlmw-child",
                   extra_conf={{"spark.sql.warehouse.dir":
                                tempfile.mkdtemp(prefix="wh-dlmw-")}})
 model = mw._writer_ops(spark, {path!r}, {wid}, {seed}, n_ops=6)

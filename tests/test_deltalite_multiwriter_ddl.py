@@ -430,7 +430,7 @@ sys.path.insert(0, {repo!r} + "/tests")
 import tempfile
 from dbt_spark_models_spark.session import get_spark
 import test_deltalite_multiwriter_ddl as ddl
-spark = get_spark("dlmw-ddl-child", shuffle_partitions=2,
+spark = get_spark("dlmw-ddl-child",
                   extra_conf={{"spark.sql.warehouse.dir":
                                tempfile.mkdtemp(prefix="wh-dlmw-ddl-")}})
 n = ddl._ddl_ops(spark, {path!r}, {wid}, {seed}, n_ops=5)
@@ -490,7 +490,7 @@ sys.path.insert(0, {repo!r})
 import tempfile
 from dbt_spark_models_spark.session import get_spark
 from dbt_spark_models_spark.sources import deltalite
-spark = get_spark("dlmw-stage-child", shuffle_partitions=2,
+spark = get_spark("dlmw-stage-child",
                   extra_conf={{"spark.sql.warehouse.dir":
                                tempfile.mkdtemp(prefix="wh-dlmw-stage-")}})
 df = spark.createDataFrame([({marker}, "staged")], "k int, v string").coalesce(1)

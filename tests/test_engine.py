@@ -446,3 +446,13 @@ def test_example_projects_style_clean():
     for root in roots:
         issues = lint_style(Project.load(root))
         assert not issues, (root, [(i.rule, i.node, i.message) for i in issues[:5]])
+
+
+def test_session_shuffle_partitions_is_32(spark):
+    """``ensure_session_confs`` pins spark.sql.shuffle.partitions to 32
+    on every session the engine prepares; ``get_spark`` takes no knob
+    for it."""
+    from dbt_spark_models_spark.session import get_spark
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    assert get_spark().conf.get("spark.sql.shuffle.partitions") == "32"

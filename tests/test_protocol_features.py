@@ -187,26 +187,6 @@ def test_unsupported_reader_version_refused(spark):
         deltalite.read(spark, path)
 
 
-def test_streaming_source_refuses_unknown_reader_feature(spark):
-    from dbt_spark_models_spark.sources.deltalite_stream import (
-        DeltaLiteStreamReader,
-    )
-
-    path = _doctor(
-        spark,
-        "stream_unknown",
-        {
-            "minReaderVersion": 3,
-            "minWriterVersion": 7,
-            "readerFeatures": ["rowMagicV9"],
-            "writerFeatures": ["rowMagicV9"],
-        },
-    )
-    reader = DeltaLiteStreamReader({"path": path})
-    with pytest.raises(DeltaProtocolError):
-        list(reader._rows_for_versions(0, 0))
-
-
 def test_merge_protocol_unit():
     # no downgrade
     hi = {"minReaderVersion": 3, "minWriterVersion": 7, "readerFeatures": ["deletionVectors"], "writerFeatures": ["deletionVectors"]}

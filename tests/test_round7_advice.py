@@ -7,8 +7,8 @@
    (no dataChange removes, no DV repoints) are legal; only merges that
    match existing rows are rejected.
 3. The non-change-feed stream path reads each add through its OWN
-   deletionVector — streaming a shallow clone of a DV table (adds carry
-   DVs, no removes) must not resurrect tombstoned rows.
+   deletionVector (tested with the stream source in
+   tests/test_deltalite_stream.py).
 4. exact_ntile / distributed_cumsum materialize via localCheckpoint, not
    a session-lifetime persist.
 5. read_changes folds the log forward once (_walk_commits) instead of
@@ -128,54 +128,6 @@ def test_cow_merge_zero_match_skips_rewrite(spark, tdir):
     assert got == [1, 2, 4]
 
 
-# ---------------------------------------------------------------- ADVICE 3
-
-
-def _stream_rows(spark, path, ckpt, change_feed=False):
-    from dbt_spark_models_spark.sources.deltalite_stream import (
-        DeltaLiteStreamSource,
-    )
-
-    try:
-        spark.dataSource.register(DeltaLiteStreamSource)
-    except Exception:  # noqa: BLE001
-        pass
-    reader = spark.readStream.format("deltalite_stream").option("path", path)
-    if change_feed:
-        reader = reader.option("changeFeed", "true")
-    stream = reader.load()
-    rows: list = []
-
-    def _sink(df, _bid):
-        rows.extend(df.collect())
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return rows
-
-
-def test_stream_shallow_clone_of_dv_table_filters_tombstones(spark, tdir):
-    """A shallow clone's v0 commit is adds-carrying-DVs with NO removes,
-    so the 'source has removes' guard never fires — the append stream
-    path must still read each file through its add's own DV."""
-    src = os.path.join(os.path.dirname(tdir), "src")
-    deltalite.write(
-        spark, _df(spark, [(1, "a"), (2, "b"), (3, "c")]).coalesce(1), src
-    )
-    deltalite.delete(spark, src, [("k", "=", 2)], deletion_vectors=True)
-    deltalite.clone(spark, src, tdir)
-    ckpt = tempfile.mkdtemp(prefix="dl-r7-ckpt-")
-    rows = _stream_rows(spark, tdir, ckpt)
-    assert sorted((r.k, r.v) for r in rows) == [(1, "a"), (3, "c")]
-
-
 # ---------------------------------------------------------------- ADVICE 4
 
 
@@ -245,46 +197,6 @@ def test_read_changes_full_history_dv_parity(spark, tdir):
     # v1 deletes k=2 (parent has 1,2,3); v2 deletes k=3 (parent must NOT
     # resurrect k=2 — it reads v1's DV through the folded parent state)
     assert sorted(by_type["delete"]) == [2, 3]
-
-
-def test_dist_stream_shallow_clone_of_dv_table_filters_tombstones(spark, tdir):
-    """Same ADVICE-3 guarantee on the DISTRIBUTED stream reader: each
-    planned partition ships its add's own deletionVector path to the
-    executor, so the clone's adds-with-DVs commit streams without
-    resurrecting tombstones."""
-    from dbt_spark_models_spark.sources.deltalite_stream import (
-        DeltaLiteDistStreamSource,
-    )
-
-    src = os.path.join(os.path.dirname(tdir), "srcd")
-    deltalite.write(
-        spark, _df(spark, [(1, "a"), (2, "b"), (3, "c")]).coalesce(1), src
-    )
-    deltalite.delete(spark, src, [("k", "=", 2)], deletion_vectors=True)
-    deltalite.clone(spark, src, tdir)
-    try:
-        spark.dataSource.register(DeltaLiteDistStreamSource)
-    except Exception:  # noqa: BLE001
-        pass
-    ckpt = tempfile.mkdtemp(prefix="dl-r7-ckptd-")
-    rows: list = []
-
-    def _sink(df, _bid):
-        rows.extend((r.k, r.v) for r in df.collect())
-
-    q = (
-        spark.readStream.format("deltalite_stream_dist")
-        .option("path", tdir)
-        .load()
-        .writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert sorted(rows) == [(1, "a"), (3, "c")]
 
 
 # ------------------------------------------------------- generated columns
