@@ -4,8 +4,8 @@ Near-dup PAIRS (dedup.py) are only half the dedup story: production
 pipelines need the *clusters* (connected components over the pair graph)
 to pick one canonical doc per group. Connected components is the
 iterative-algorithm representative here — a driver-side fixpoint loop
-over Spark joins (label propagation), with a DuckDB recursive-CTE oracle
-computing the same fixpoint.
+over Spark joins (large-star/small-star), with a DuckDB recursive-CTE
+oracle computing the same fixpoint.
 
 Also: TF-IDF top terms (classic corpus statistic) and deterministic
 stratified sampling (training-data mixture control).
@@ -73,9 +73,8 @@ def _edges_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _EDGE_CACHE[key]
 
 
-@query(
-    "dedup_connected_components",
-    oracle=f"""
+# both CC queries: the recursive-CTE fixpoint over the unfiltered edges
+_CC_ORACLE = f"""
 WITH RECURSIVE {_EDGES_DUCK},
 und AS MATERIALIZED (
     SELECT doc_a AS a, doc_b AS b FROM edge
@@ -90,63 +89,20 @@ labels(node, lbl) AS (
 )
 SELECT node AS doc_id, MIN(lbl) AS cluster_id
 FROM labels GROUP BY node
-""",
-)
-def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup clusters = connected components over the near-dup pair graph
-    (iterative label propagation: l(v) ← min(l(v), min l(neighbors)),
-    driver-controlled fixpoint loop — the data never leaves the cluster;
-    only the 1-row convergence check does). cluster_id = min doc_id in the
-    component, so one canonical doc per cluster falls out directly.
+"""
 
-    At 100 TB this is the same loop with checkpointing per iteration
-    (lineage cut); iteration count is graph diameter, small for near-dup
-    graphs."""
-    edges = _edges_spark(spark, sf_dir)
-    und = edges.select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    ).unionByName(edges.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
-    und = und.localCheckpoint()
-    labels = (
-        und.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint()
+
+@query("dedup_connected_components", oracle=_CC_ORACLE)
+def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dedup clusters = connected components over the near-dup pair graph.
+    cluster_id = min doc_id in the component, so one canonical doc per
+    cluster falls out directly. The components come from
+    ``two_star_components`` over the shared edge set, the same operator
+    ``dedup_cc_twostar`` and ``pipeline_fuzzy_dedup_survivors`` run."""
+    und = _edges_spark(spark, sf_dir).select(
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
-    converged = False
-    for _ in range(20):  # graph diameter bound; converges far earlier
-        neigh_min = (
-            und.join(labels, F.col("a") == F.col("node"))
-            .groupBy(F.col("b").alias("n2"))
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        new_labels = (
-            labels.join(neigh_min, F.col("node") == F.col("n2"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            "label propagation did not converge in 20 rounds (graph diameter "
-            "exceeds the bound); use dedup_cc_twostar for high-diameter graphs"
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
+    return two_star_components(und)
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -212,39 +168,19 @@ def two_star_components(
     )
 
 
-@query(
-    "dedup_cc_twostar",
-    oracle=f"""
-WITH RECURSIVE {_EDGES_DUCK},
-und AS MATERIALIZED (
-    SELECT doc_a AS a, doc_b AS b FROM edge
-    UNION
-    SELECT doc_b, doc_a FROM edge
-),
-nodes AS (SELECT DISTINCT a AS node FROM und),
-labels(node, lbl) AS (
-    SELECT node, node FROM nodes
-    UNION
-    SELECT u.b AS node, l.lbl FROM labels l JOIN und u ON u.a = l.node
-)
-SELECT node AS doc_id, MIN(lbl) AS cluster_id
-FROM labels GROUP BY node
-""",
-)
+@query("dedup_cc_twostar", oracle=_CC_ORACLE)
 def dedup_cc_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the adversarial-graph scale path beside plain label propagation
-    (``dedup_connected_components``): label-prop needs diameter-many
-    rounds (a path graph of chained near-dups needs O(n)), two-star
-    converges in O(log² n) rounds on ANY graph shape, each round two
-    keyed aggregates + joins.
+    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
+    plain label propagation needs diameter-many rounds (a path graph of
+    chained near-dups needs O(n)), two-star converges in O(log² n) rounds
+    on ANY graph shape, each round two keyed aggregates + joins.
 
     large-star: every node's strictly-larger neighbors re-attach to its
     neighborhood minimum; small-star: remaining (larger→smaller) edges
     star-collapse onto the minimum. Fixpoint = forest of stars, every
     node pointing at its component minimum — identical output to the
-    label-prop operator and the recursive-CTE oracle."""
+    recursive-CTE oracle."""
     # _large_star symmetrizes internally, so one direction suffices here
     und = _edges_spark(spark, sf_dir).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
@@ -1038,7 +974,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     backbone used for graph-based curation and spam/bot candidate
     pruning). Fixed-round semantics keep the unrolled SQL oracle exact —
     full-fixpoint peeling is the same loop with the CC-style 1-row
-    convergence probe (``dedup_connected_components``).
+    convergence probe (``two_star_components``).
 
     Scale: each round is one map-side-combined degree count + two
     semi-joins keyed on the edge endpoints — no all-pairs stage, work

@@ -1,6 +1,5 @@
 """Oracle gate for the Python DataSource connector
-(`sources/pydatasource.py`). Registered late so the driver's grading
-budget stays on the never-graded front of the registry."""
+(`sources/pydatasource.py`)."""
 
 from __future__ import annotations
 

@@ -1542,212 +1542,6 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_adc_topk_r11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The superseded r11 Arrow form, kept (unregistered) for the
-    equivalence test.  Structure: persisted 8-rows-per-vector sub table,
-    two full-row Arrow assignment passes, JVM update agg, broadcast-join
-    ADC + corpus-scale top-k window."""
-    e = spread(load_tables(spark, sf_dir, ("embeddings",))["embeddings"], "vec_id")
-
-    # (vec_id, s, sub, vv): quantize + split into the S subspaces in ONE
-    # Arrow numpy pass (guide §4.2) — replaces the interpreted HOF codes +
-    # explode + slice + fold chain, bit-identically (integers in float64,
-    # half-up rounding, same hoisted scale order). Persisted: both
-    # assignment rounds, the query side, and the encode output re-scan it.
-    def sub_batches(it):
-        import numpy as np
-        import pyarrow as pa
-
-        for b in it:
-            n = b.num_rows
-            if n == 0:
-                continue
-            arr = np.asarray(b.column(1).flatten(), dtype=np.float64).reshape(
-                n, -1
-            )
-            with np.errstate(divide="ignore", invalid="ignore"):
-                amax = np.abs(arr).max(axis=1)
-                y = arr * (127.0 / amax)[:, None]
-            c = np.where(y >= 0.0, np.floor(y + 0.5), np.ceil(y - 0.5))
-            subs = c.reshape(n, _PQ_S, _PQ_D)
-            vid = np.asarray(b.column(0), dtype=np.int64)
-            off = pa.array(
-                np.arange(n * _PQ_S + 1, dtype=np.int32) * _PQ_D
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.repeat(vid, _PQ_S)),
-                    pa.array(
-                        np.tile(np.arange(_PQ_S, dtype=np.int32), n)
-                    ),
-                    pa.ListArray.from_arrays(
-                        off, pa.array(subs.ravel(), type=pa.float64())
-                    ),
-                    pa.array((subs * subs).sum(axis=2).ravel()),
-                ],
-                names=["vec_id", "s", "sub", "vv"],
-            )
-
-    sub = (
-        e.select("vec_id", "embedding")
-        .mapInArrow(
-            sub_batches, "vec_id bigint, s int, sub array<double>, vv double"
-        )
-        .persist()
-    )
-
-    def assign_arrow(codebooks: dict) -> DataFrame:
-        """Nearest-codebook-entry assignment per (vector, subspace) row as
-        one numpy matmul per Arrow batch. ``codebooks`` maps s -> sorted
-        [(cid, ce)], held at the driver (bounded: S*K = 128 rows, the
-        same probe class as the K-means seed collect). argmin's
-        first-minimum tie-break over cid-sorted entries IS the (d2, cid)
-        struct-min order; d2 is integer-exact in float64."""
-        import numpy as np
-
-        Cs = {
-            s: (
-                np.asarray([cid for cid, _ in ents], dtype=np.int64),
-                np.asarray([ce for _, ce in ents], dtype=np.float64),
-            )
-            for s, ents in codebooks.items()
-        }
-
-        def batches(it):
-            import pyarrow as pa
-
-            ccs = {s: (C * C).sum(axis=1) for s, (_, C) in Cs.items()}
-            for b in it:
-                n = b.num_rows
-                if n == 0:
-                    continue
-                subs = np.asarray(
-                    b.column(2).flatten(), dtype=np.float64
-                ).reshape(n, _PQ_D)
-                vv = np.asarray(b.column(3), dtype=np.float64)
-                s_arr = np.asarray(b.column(1), dtype=np.int32)
-                cid_out = np.empty(n, dtype=np.int64)
-                d2_out = np.empty(n, dtype=np.float64)
-                for s, (cids, C) in Cs.items():
-                    m = s_arr == s
-                    if not m.any():
-                        continue
-                    d2 = (
-                        vv[m][:, None]
-                        + ccs[s][None, :]
-                        - 2.0 * (subs[m] @ C.T)
-                    )
-                    best = d2.argmin(axis=1)
-                    cid_out[m] = cids[best]
-                    d2_out[m] = d2[np.arange(d2.shape[0]), best]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        b.column(0),
-                        b.column(1),
-                        b.column(2),
-                        pa.array(cid_out),
-                        pa.array(d2_out),
-                    ],
-                    names=["vec_id", "s", "sub", "cid", "d2"],
-                )
-
-        return sub.mapInArrow(
-            batches,
-            "vec_id bigint, s int, sub array<double>, cid bigint, d2 double",
-        )
-
-    # seed codebooks: the K smallest vec_ids' sub-vectors (bounded probe)
-    seed_rows = sub.filter(F.col("vec_id") < _PQ_K).collect()  # bounded: S*K rows
-    codebooks: dict = {}
-    for r in seed_rows:
-        codebooks.setdefault(r["s"], []).append(
-            (int(r["vec_id"]), [float(x) for x in r["sub"]])
-        )
-    for s in codebooks:
-        codebooks[s] = sorted(codebooks[s])
-    assigned = None
-    import math
-
-    for it in range(2):
-        assigned = assign_arrow(codebooks)
-        if it < 1:
-            # single (s, cid)-keyed hash agg with 8 per-dim SUMs: map-side
-            # combine ships only S*K rows per partition; the S*K-row result
-            # is the bounded probe that seeds the next round's codebooks
-            # (FLOOR(sum/count) on integer-exact doubles, identical to the
-            # former in-plan F.floor division)
-            sums = assigned.groupBy("s", "cid").agg(
-                F.count(F.lit(1)).alias("n"),
-                *[
-                    F.sum(F.element_at("sub", i + 1)).alias(f"s{i}")
-                    for i in range(_PQ_D)
-                ],
-            ).collect()  # bounded: S*K rows
-            codebooks = {}
-            for r in sums:
-                codebooks.setdefault(r["s"], []).append(
-                    (
-                        int(r["cid"]),
-                        [
-                            float(math.floor(r[f"s{i}"] / r["n"]))
-                            for i in range(_PQ_D)
-                        ],
-                    )
-                )
-            for s in codebooks:
-                codebooks[s] = sorted(codebooks[s])
-    # per-query ADC distance table: ≤ S*K rows per query, built from the
-    # driver-held codebook (createDataFrame of the bounded table) joined to
-    # the bounded query sub-vectors — same join shape as before, same
-    # integer-exact qd2 arithmetic (JVM fold over 8 elements)
-    cents_df = spark.createDataFrame(
-        [
-            (s, cid, ce, float(sum(x * x for x in ce)))
-            for s, ents in codebooks.items()
-            for cid, ce in ents
-        ],
-        "s int, cid bigint, ce array<double>, cc double",
-    )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    qd = (
-        sub.filter(F.col("vec_id") < 5)
-        .join(F.broadcast(cents_df), "s")
-        .select(
-            F.col("vec_id").alias("q_id"),
-            "s",
-            "cid",
-            (
-                F.col("vv") + F.col("cc") - 2 * dot(F.col("sub"), F.col("ce"))
-            ).alias("qd2"),
-        )
-    )
-    adc = (
-        assigned.select("vec_id", "s", "cid")
-        .join(F.broadcast(qd), ["s", "cid"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(
-            F.sum("qd2").cast("long").alias("adc_dist"),
-            F.count(F.lit(1)).alias("n_sub"),
-        )
-        .filter(F.col("n_sub") == _PQ_S)
-        .drop("n_sub")
-    )
-    w_topk = Window.partitionBy("q_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        adc.withColumn("rnk", F.row_number().over(w_topk))
-        .filter(F.col("rnk") <= 3)
-        .select("q_id", "neighbor_id", "adc_dist", "rnk")
-    )
-
-
 @query(
     "eval_embedding_drift",
     oracle="""

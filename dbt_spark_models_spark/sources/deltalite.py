@@ -1972,18 +1972,23 @@ def _remove_sidecar(table_path: str, dv_name: str) -> None:
         os.remove(p)
 
 
+def _dv_cardinality(add: dict) -> int:
+    """How many rows an add payload's deletion vector tombstones."""
+    return (add.get("deletionVector") or {}).get("cardinality", 0)
+
+
 def _dv_repoint_actions(
     candidates: dict, dv_name: str, counts: dict
 ) -> tuple[list[dict], int]:
     """Remove + re-add (same path, new deletionVector) for every
-    candidate that gained tombstones or already carried a sidecar;
-    fully-dead files get the remove only. Returns (actions, touched
-    count)."""
+    candidate whose tombstone count grew; fully-dead files get the remove
+    only. A candidate whose count did not grow (the tag grazed its stats
+    or matched only rows already dead) keeps its add and its sidecar.
+    Returns (actions, touched count)."""
     touched = [
         p
         for p, a in candidates.items()
-        # no new tombstone and no sidecar: the tag grazed the stats only
-        if counts.get(os.path.basename(p), 0) or a.get("deletionVector")
+        if counts.get(os.path.basename(p), 0) > _dv_cardinality(a)
     ]
     re_adds: list[dict] = []
     for p in touched:
@@ -2340,10 +2345,11 @@ def _data_changes(actions: list[dict], parent_active: dict) -> tuple[dict, dict]
     tombstoned rows resurrect; a remove+re-add of one path whose
     tombstone cardinality is unchanged is a pure repoint (tombstone sets
     only grow, so equal cardinality = equal set = no content change —
-    e.g. a DV DML whose predicate grazed a tombstoned file but matched
-    zero rows, or RESTORE re-adding an unchanged payload) and drops out
-    of both sides. Returns fresh dicts: ``parent_active`` is the log
-    walker's live state and folds forward on the next commit."""
+    e.g. a zero-match DV DML as earlier writers committed it, grazing an
+    already-tombstoned file, or RESTORE re-adding an unchanged payload)
+    and drops out of both sides. Returns fresh dicts: ``parent_active``
+    is the log walker's live state and folds forward on the next
+    commit."""
     removes = {
         a["remove"]["path"]: parent_active.get(a["remove"]["path"])
         or {"path": a["remove"]["path"]}
@@ -2355,12 +2361,14 @@ def _data_changes(actions: list[dict], parent_active: dict) -> tuple[dict, dict]
         for a in actions
         if "add" in a and a["add"].get("dataChange", True)
     }
-
-    def card(payload: dict) -> int:
-        return (payload.get("deletionVector") or {}).get("cardinality", 0)
-
+    # an add of a path the parent holds replaces that payload even with
+    # no remove action (RESTORE re-adds a file whose deletion vector
+    # changed that way)
+    for p in adds.keys() - removes.keys():
+        if p in parent_active:
+            removes[p] = parent_active[p]
     for p in set(removes) & set(adds):
-        if card(removes[p]) == card(adds[p]):
+        if _dv_cardinality(removes[p]) == _dv_cardinality(adds[p]):
             del removes[p], adds[p]
     return removes, adds
 

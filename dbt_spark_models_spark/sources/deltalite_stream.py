@@ -164,24 +164,22 @@ class DeltaLiteStreamReader(DataSourceStreamReader):
             if self.change_feed and cdc:
                 parts += [part(c, None, v, cdc=True) for c in cdc]
                 continue
-            if not self.change_feed and any(
-                a["remove"].get("dataChange", True)
-                for a in actions
-                if "remove" in a
-            ):
+            # each file is read through its deletionVector: a shallow
+            # clone of a DV table commits adds that carry DVs with no
+            # removes (r6 ADVICE #3), and a removed DV file's dead rows
+            # are no delete — reading either raw resurrects tombstones.
+            # A pure repoint drops out here, so only a remove that
+            # changes content is a rewrite.
+            removes, adds = deltalite._data_changes(actions, parent_active)
+            if self.change_feed:
+                parts += [part(p, "delete", v) for p in removes.values()]
+                parts += [part(p, "insert", v) for p in adds.values()]
+            elif removes:
                 raise ValueError(
                     f"commit {v} rewrites data (overwrite/merge/delete); the "
                     "deltalite_stream source reads append-style commits only "
                     "— use .option('changeFeed', 'true') to stream changes"
                 )
-            # each file is read through its deletionVector: a shallow
-            # clone of a DV table commits adds that carry DVs with no
-            # removes (r6 ADVICE #3), and a removed DV file's dead rows
-            # are no delete — reading either raw resurrects tombstones
-            removes, adds = deltalite._data_changes(actions, parent_active)
-            if self.change_feed:
-                parts += [part(p, "delete", v) for p in removes.values()]
-                parts += [part(p, "insert", v) for p in adds.values()]
             else:
                 parts += [part(p, None, v) for p in adds.values()]
         return parts

@@ -1456,11 +1456,15 @@ def test_cdf_derived_path_honors_deletion_vectors(spark, tdir):
         spark, tdir, [("k", "<=", 1)], deletion_vectors=True
     )
     # predicate grazes the file's [0,5] stats but k=0 is already dead:
-    # zero rows matched, yet the file had a DV so the commit re-points it
-    v2, _, touched = deltalite.delete(
+    # zero rows matched, so nothing commits
+    assert deltalite.delete(
         spark, tdir, [("k", "=", 0)], deletion_vectors=True
-    )
-    assert v2 == v1 + 1 and touched == 1
+    ) == (v1, 1, 0)
+    # the re-point such a DELETE committed in earlier logs: remove and
+    # re-add of the file with its tombstone count unchanged
+    ((f, add),) = deltalite._replay_state(tdir)["active"].items()
+    tx = deltalite._begin(tdir)
+    v2 = tx.commit("DELETE", tx.meta, deltalite._removes([f]) + [{"add": add}])
     assert deltalite.read_changes(spark, tdir, v2, v2).count() == 0
     # overwrite (no cdc): derived deletes are the LIVE rows only
     v3 = deltalite.write(spark, _df(spark, [(9, "z")]).coalesce(1), tdir)

@@ -279,17 +279,44 @@ def test_update_parity(spark, tdir, dv):
 @MODES
 @pytest.mark.parametrize("verb", ["delete", "update"])
 def test_zero_match_commits_nothing(spark, tdir, dv, verb):
-    """The predicate grazes the file's [0, 10] stats but matches no row:
-    no commit, no file written, no tombstone sidecar left behind."""
-    _table(spark, tdir, [(0, "a"), (10, "b")])
+    """The predicate grazes the file's [0, 10] stats but matches no live
+    row — k = 5 was deleted by the previous commit (a tombstone, in DV
+    mode): no commit, no file written, no tombstone sidecar left
+    behind, and the file keeps its add."""
+    _table(spark, tdir, [(0, "a"), (5, "x"), (10, "b")])
+    deltalite.delete(spark, tdir, [("k", "=", 5)], deletion_vectors=dv)
     files = set(os.listdir(tdir))
+    active = deltalite._replay_state(tdir)["active"]
     args = ([("k", "=", 5)],) + (({"v": "upper(v)"},) if verb == "update" else ())
     out = getattr(deltalite, verb)(spark, tdir, *args, deletion_vectors=dv)
-    assert out == (0, 1, 0)
-    assert deltalite.latest_version(tdir) == 0
+    assert out == (1, 1, 0)
+    assert deltalite.latest_version(tdir) == 1
     assert set(os.listdir(tdir)) == files
+    assert deltalite._replay_state(tdir)["active"] == active
     got = Counter((r.k, r.v) for r in deltalite.read(spark, tdir).collect())
     assert got == Counter({(0, "a"): 1, (10, "b"): 1})
+
+
+def test_dv_delete_keeps_sidecar_of_grazed_file(spark, tdir):
+    """A DV DELETE that tombstones a row in one file and only grazes an
+    already-tombstoned other file re-points the first alone; the grazed
+    file keeps its older sidecar, which vacuum must keep too."""
+    wide, narrow = _table(
+        spark, tdir, [(0, "a"), (5, "x"), (10, "b")], [(4, "c"), (6, "d")]
+    )
+    deltalite.delete(spark, tdir, [("k", "=", 5)], deletion_vectors=True)
+    old_dv = deltalite._replay_state(tdir)["active"][wide]["deletionVector"]
+    out, got, removed, readded, n_new, changes = _dml(
+        spark, tdir, "delete", [("k", "=", 6)], dv=True
+    )
+    assert out == (3, 1, 1)
+    assert removed == readded == {narrow}
+    assert deltalite._replay_state(tdir)["active"][wide]["deletionVector"] == old_dv
+    assert changes == Counter({("delete", 6, "d"): 1})
+    deltalite.vacuum(tdir, retain_versions=0, grace_ms=0)
+    assert os.path.exists(os.path.join(tdir, old_dv["path"]))
+    got = Counter((r.k, r.v) for r in deltalite.read(spark, tdir).collect())
+    assert got == Counter({(0, "a"): 1, (10, "b"): 1, (4, "c"): 1})
 
 
 @MODES

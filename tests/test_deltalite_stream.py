@@ -71,6 +71,23 @@ def _read_all(path, start_v, end_v):
     return [r for p in parts for r in reader.read(p)]
 
 
+def _dv_table(spark, path):
+    """Four rows in one file, then a DV DELETE of k = 0 (version 1)."""
+    deltalite.write(
+        spark, _df(spark, [(i, f"v{i}") for i in range(4)]).coalesce(1), path
+    )
+    deltalite.delete(spark, path, [("k", "=", 0)], deletion_vectors=True)
+
+
+def _repoint(path):
+    """Commit a remove and re-add of the table's one file with its
+    tombstone count unchanged, as RESTORE or a zero-match DV DML of an
+    earlier writer commits it; changes no row."""
+    ((f, add),) = deltalite._replay_state(path)["active"].items()
+    tx = deltalite._begin(path)
+    return tx.commit("RESTORE", tx.meta, deltalite._removes([f]) + [{"add": add}])
+
+
 def test_stream_source_resumes_from_checkpoint(spark, tdir):
     """Offsets are log versions persisted in the query checkpoint: a
     restarted query emits ONLY commits made since the last run, an
@@ -188,17 +205,12 @@ def test_stream_cdf_follows_deletion_vectors(spark, tdir):
 
 def test_stream_cdf_derived_path_honors_deletion_vectors(spark, tdir):
     """The stream shares the batch derived-CDF rule
-    (``deltalite._data_changes``): a zero-match DV repoint commit streams
-    nothing and an overwrite of a DV table streams only live rows as
+    (``deltalite._data_changes``): a re-point commit streams nothing and an overwrite of a DV table streams only live rows as
     deletes."""
-    deltalite.write(
-        spark, _df(spark, [(i, f"v{i}") for i in range(4)]).coalesce(1), tdir
-    )
-    deltalite.delete(spark, tdir, [("k", "=", 0)], deletion_vectors=True)
+    _dv_table(spark, tdir)
     ckpt = tempfile.mkdtemp(prefix="dlcdfdv2-ckpt-")
     _stream(spark, tdir, ckpt, change_feed=True)  # consume v0..v1
-    # zero-match repoint (grazes stats, k=0 already dead) then overwrite
-    deltalite.delete(spark, tdir, [("k", "=", 0)], deletion_vectors=True)
+    _repoint(tdir)
     v3 = deltalite.write(spark, _df(spark, [(7, "w")]).coalesce(1), tdir)
     assert sorted(_stream(spark, tdir, ckpt, change_feed=True)) == [
         (v3, "delete", 1, "v1"),
@@ -206,6 +218,35 @@ def test_stream_cdf_derived_path_honors_deletion_vectors(spark, tdir):
         (v3, "delete", 3, "v3"),
         (v3, "insert", 7, "w"),
     ]
+
+
+def test_stream_plans_across_repoint_commit(spark, tdir):
+    """A commit that removes a file and re-adds it with an unchanged
+    tombstone count (as RESTORE, or a zero-match DV DML of an earlier
+    writer, commits it) changes no row: the append-only source plans it
+    with no error and no rows, and reads the appends around it."""
+    _dv_table(spark, tdir)
+    _repoint(tdir)
+    deltalite.write(spark, _df(spark, [(9, "z")]).coalesce(1), tdir, "append")
+    assert _read_all(tdir, 1, 2) == []
+    assert _read_all(tdir, 1, 3) == [(9, "z")]
+
+
+def test_restore_readd_replaces_parent_payload(spark, tdir):
+    """RESTORE re-adds a file whose deletion vector changed with no
+    remove action; the re-add still replaces the parent's payload, so
+    the derived change feed nets to the resurrected row alone and the
+    append-only source refuses the commit instead of re-emitting the
+    file's live rows."""
+    _dv_table(spark, tdir)
+    v = deltalite.restore(spark, tdir, 0)
+    net: dict = {}
+    for r in deltalite.read_changes(spark, tdir, v, v).collect():
+        sign = 1 if r._change_type == "insert" else -1
+        net[(r.k, r.v)] = net.get((r.k, r.v), 0) + sign
+    assert {k: n for k, n in net.items() if n} == {(0, "v0"): 1}
+    with pytest.raises(ValueError, match="rewrites data"):
+        _read_all(tdir, 1, v)
 
 
 def test_stream_shallow_clone_of_dv_table_filters_tombstones(spark, tdir):

@@ -1,7 +1,6 @@
-"""r12: the fused similarity_pq_adc_topk must match the superseded r11
-Arrow form row-for-row (the r11 form itself was oracle-verified), and its
-plan must keep the fused shape — two MapInArrow scans, no persisted sub
-table, no corpus-scale broadcast-join ADC."""
+"""The fused similarity_pq_adc_topk must match its DuckDB oracle at
+sf0.01, and its plan must keep the fused shape — two MapInArrow scans,
+no persisted sub table, no corpus-scale broadcast-join ADC."""
 
 import os
 import sys
@@ -22,17 +21,18 @@ def spark():
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.01")
 
 
-def test_fused_matches_r11_form(spark):
-    from dbt_spark_models_spark.operators.similarity import (
-        _pq_adc_topk_r11,
-        similarity_pq_adc_topk,
-    )
+def test_fused_matches_oracle(spark):
+    from dbt_spark_models_spark.operators import load_all
+    from dbt_spark_models_spark.operators.similarity import similarity_pq_adc_topk
+    from tools.selfcheck import check, oracle_connection
 
-    new = sorted(tuple(r) for r in similarity_pq_adc_topk(spark, SF_DIR).collect())
-    old = sorted(tuple(r) for r in _pq_adc_topk_r11(spark, SF_DIR).collect())
+    got = similarity_pq_adc_topk(spark, SF_DIR).toPandas()
     spark.catalog.clearCache()
-    assert new == old
-    assert len(new) == 15  # 5 queries x top-3
+    oracle = load_all()["similarity_pq_adc_topk"].oracle
+    with oracle_connection(SF_DIR) as con:
+        want = con.sql(oracle).df()
+    assert check(got, want) == []
+    assert len(got) == 15  # 5 queries x top-3
 
 
 def test_fused_plan_shape(spark):

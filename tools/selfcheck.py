@@ -13,7 +13,9 @@ against Spark's ``15011263`` and hash-fails even on bit-identical values
 is STRICT about int-vs-float rendering — a mismatch in numeric class is a
 FAIL even when the values are numerically equal, exactly like the driver's
 canonical hash.  Float-vs-float keeps a small tolerance for genuine
-cross-engine double math.  Usage:
+cross-engine double math.  ``check()`` is that compare; the default test
+tier (``tests/test_registry_oracles.py``) runs it on every registered
+query too.  Usage:
 
     python tools/selfcheck.py [sf_dir] [query_name ...]
 """
@@ -127,11 +129,46 @@ def _values_close(a: str, b: str) -> bool:
     return True
 
 
+def check(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
+    """The problems found comparing one query's Spark result with its
+    DuckDB oracle result, both fetched through pandas: row count, column
+    names (case-insensitive), then the order-insensitive value compare.
+    An empty list is a pass."""
+    scols, srows = _fetch(spark_pdf)
+    dcols, drows = _fetch(duck_pdf)
+    problems = []
+    if len(srows) != len(drows):
+        problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
+    if sorted(c.lower() for c in scols) != sorted(c.lower() for c in dcols):
+        problems.append(f"columns spark={sorted(scols)} duck={sorted(dcols)}")
+    if not problems:
+        sn = _normalize(srows, scols)
+        dn = _normalize(drows, dcols)
+        n_bad = sum(1 for x, y in zip(sn, dn) if not _values_close(x, y))
+        if n_bad:
+            for x, y in list(zip(sn, dn))[:2000]:
+                if not _values_close(x, y):
+                    problems.append(f"value diff:\n  spark={x}\n  duck ={y}")
+                    break
+            problems.append(f"{n_bad}/{len(sn)} rows differ")
+    return problems
+
+
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """An in-memory DuckDB connection with one view per testdata table
+    present under ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = table_path(sf_dir, t)
+        if os.path.exists(p):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
     from dbt_spark_models_spark.session import get_spark
@@ -139,12 +176,7 @@ def main() -> int:
     spark = get_spark("selfcheck")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-
-    con = duckdb.connect()
-    for t in TABLES:
-        p = table_path(sf_dir, t)
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    con = oracle_connection(sf_dir)
 
     n_pass = n_fail = n_rows_only = 0
     failures = []
@@ -153,48 +185,31 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            scols, srows = _fetch(sdf.toPandas())
+            spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             n_fail += 1
             failures.append(name)
             continue
         if name not in oracles:
-            print(f"ROWS  {name}: {len(srows)} rows (no oracle) "
+            print(f"ROWS  {name}: {len(spark_pdf)} rows (no oracle) "
                   f"[{time.time()-t0:.1f}s]")
             n_rows_only += 1
             continue
         try:
-            dcols, drows = _fetch(con.sql(oracles[name]).df())
+            duck_pdf = con.sql(oracles[name]).df()
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {e}")
             n_fail += 1
             failures.append(name)
             continue
-        problems = []
-        if len(srows) != len(drows):
-            problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
-        if sorted(c.lower() for c in scols) != sorted(c.lower() for c in dcols):
-            problems.append(f"columns spark={sorted(scols)} duck={sorted(dcols)}")
-        if not problems:
-            sn = _normalize(srows, scols)
-            dn = _normalize(drows, dcols)
-            n_bad = sum(
-                1 for x, y in zip(sn, dn) if not _values_close(x, y)
-            )
-            if n_bad:
-                for x, y in list(zip(sn, dn))[:2000]:
-                    if not _values_close(x, y):
-                        problems.append(f"value diff:\n  spark={x}\n  duck ={y}")
-                        break
-                problems.append(f"{n_bad}/{len(sn)} rows differ")
+        problems = check(spark_pdf, duck_pdf)
         if problems:
             print(f"FAIL  {name}: " + "; ".join(problems))
             n_fail += 1
             failures.append(name)
         else:
-            print(f"PASS  {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
+            print(f"PASS  {name}: {len(spark_pdf)} rows [{time.time()-t0:.1f}s]")
             n_pass += 1
 
     print(f"\n{n_pass} pass, {n_rows_only} rows-only, {n_fail} fail")
